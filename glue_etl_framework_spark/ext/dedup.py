@@ -1,82 +1,182 @@
-"""Near-duplicate text dedup at scale: pyspark.ml MinHashLSH pipeline +
-cluster-pick, complementing the portable md5-minhash variant in
-queries/dedup.py.
+"""Near-duplicate text dedup at scale: the one banded-MinHash
+implementation in the package, connected-component clustering, banded
+SimHash, and the bounded-output levers (bucket caps, top-k partners,
+lost-pair estimators).
 
-100 TB shape: shingle -> HashingTF sparse vectors -> MinHashLSH
-approxSimilarityJoin (band-bucketed join, never all-pairs) -> greedy
-cluster representative pick via iterative min-id propagation (a bounded
-number of self-joins, each a shuffle on doc_id — no driver-side graph).
+Banded MinHash: word n-gram shingles -> N_MINHASH md5 string-min
+signatures per doc -> N_MINHASH // BAND_SIZE bands keyed on xxhash64 ->
+an equi-join on (band, band key), so only same-bucket docs meet (never
+all-pairs) -> optionally exact Jaccard over xxhash64 shingle tokens. The
+registry entries (queries.dedup, queries.curation, queries.llmops) are
+fixed-parameter calls into these pieces, certified by their DuckDB oracle
+twins; minhash_banded_candidate_pairs is the user-facing form.
+
+Clustering: min-id label propagation over the pair graph, falling back to
+large-star/small-star contraction when the graph's diameter exceeds the
+round budget — a bounded number of self-joins, each a shuffle on the id,
+no driver-side graph.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-try:  # pyspark.ml is bundled with pyspark; guard anyway for slim builds
-    from pyspark.ml.feature import HashingTF, MinHashLSH
+N_MINHASH = 8     # signature length
+BAND_SIZE = 2     # rows per LSH band -> 4 bands
 
-    HAS_ML = True
-except ImportError:  # pragma: no cover
-    HAS_ML = False
+
+def shingle_array(text_col: str = "text", n: int = 3) -> Column:
+    """Overlapping word n-grams of ``text_col`` as an array column, in
+    token order (repeats kept). One regex pass — a token-start lookbehind
+    plus a lookahead capture of n tokens — measured 3.6x faster at sf0.1
+    than split + sequence + slice + array_join, which allocates four
+    intermediate arrays per row. The anchor is ^ or just after a space:
+    EXACTLY the token positions of the split-on-space formulation the
+    DuckDB oracles keep (RE2 has no lookaround), for any token content —
+    an earlier \\b-anchored variant silently diverged on
+    punctuation-leading tokens (pinned by
+    tests/test_text_properties.py::test_shingle_regex_matches_split_semantics)."""
+    return F.expr(
+        rf"regexp_extract_all({text_col}, '(?<=^| )(?=((\\S+ ){{{n - 1}}}\\S+))', 1)"
+    )
+
+
+def shingle_rows(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, shingle): the distinct word-3-gram shingles of each row's
+    ``text``."""
+    return df.select(*keep, F.explode(shingle_array()).alias("shingle")).distinct()
 
 
 def shingle_tokens(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Add a ``shingles`` array column of word n-grams (distinct). One regex
-    pass (token-start lookbehind + lookahead) builds all overlapping
-    n-grams — 3.6x faster than split+slice+join at sf0.1; anchored at ^ or
-    after a space, so it matches split-on-space token positions for any
-    token content, punctuation included (see queries.dedup.SHINGLE_REGEX)."""
-    sh = F.expr(
-        rf"regexp_extract_all({text_col}, '(?<=^| )(?=((\\S+ ){{{n - 1}}}\\S+))', 1)"
-    )
-    return df.withColumn("shingles", F.array_distinct(sh)).filter(F.size("shingles") > 0)
+    """Add a ``shingles`` array column of distinct word n-grams; rows with
+    fewer than n tokens are dropped."""
+    return df.withColumn(
+        "shingles", F.array_distinct(shingle_array(text_col, n))
+    ).filter(F.size("shingles") > 0)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    seed: int = 42,
+def minhash_signature_aggs() -> list[Column]:
+    """The N_MINHASH signature aggregates s0..s7 over a ``shingle``
+    column, for a groupBy on the doc id. Each is the string-min of a
+    32-bit md5 chunk — a random-permutation proxy that is bit-identical in
+    DuckDB (queries.dedup._minhash_sig_sql). Two md5 digests per shingle,
+    each split into four 8-hex-char chunks: 4x fewer digests than one per
+    signature (measured 33% faster end to end)."""
+    h1 = F.md5("shingle")
+    h2 = F.md5(F.concat(F.lit("x:"), F.col("shingle")))
+    return [
+        F.min(F.substring(h1 if i < 4 else h2, 1 + 8 * (i % 4), 8)).alias(f"s{i}")
+        for i in range(N_MINHASH)
+    ]
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, s0..s7) from a (doc_id, shingle) frame."""
+    return sh.groupBy("doc_id").agg(*minhash_signature_aggs())
+
+
+def minhash_bands(
+    sig: DataFrame,
+    *keep: str,
+    max_bucket_size: int | None = None,
+    cap_metrics: dict | None = None,
 ) -> DataFrame:
-    """(id_a, id_b, jaccard_distance) candidate pairs with estimated
-    Jaccard distance STRICTLY < 1 - threshold, via
-    MinHashLSH.approxSimilarityJoin — Spark's LSHModel filters
-    ``distCol < threshold`` (exclusive), so a pair at exactly the
-    boundary distance is NOT emitted (r15 review; the banded emitters
-    below use inclusive >= on similarity and are the production path).
-    The join only compares same-band rows — linear in corpus size for fixed
-    collision rates.
+    """(doc_id, *keep, band, bh): one row per (doc, band) from a signature
+    frame (extra columns ignored). The bucket key bh is xxhash64 of the
+    band's signature pair — an 8-byte long — where the oracle keys on
+    md5(s_2b || s_2b+1), a 32-char string. Both are injective in practice
+    over the SAME md5-exact signature pair, so the bucket partitions and
+    the output pair set match the oracle's unless two distinct signature
+    pairs collide in 64 bits within one band (p ~ n_docs^2/2^65 per band,
+    certified end to end by the oracle hash match). The self-join shuffle
+    moves ~4x less key volume and skips 4 md5 digests per doc.
 
-    CONVENIENCE PATH ONLY (VERDICT r12 item 5): the band self-join happens
-    inside pyspark.ml's approxSimilarityJoin, so this variant CANNOT take
-    the bounded-output levers (max_bucket_size / top_k_partners / metrics)
-    — on a corpus with quadratic true-pair density its output, like any
-    uncapped emitter's, is unbounded. At scale use
-    minhash_banded_candidate_pairs below: identical banding semantics,
-    full bounded-output contract, and bit-compatible with the
-    oracle-attested registry entry."""
-    if not HAS_ML:  # pragma: no cover
-        raise NotImplementedError("pyspark.ml not available")
-    shingled = shingle_tokens(df.select(id_col, text_col), text_col)
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=num_features)
-    feats = tf.transform(shingled)
-    # MinHashLSH requires at least one non-zero entry; HashingTF of a
-    # non-empty shingle array always qualifies.
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, 1.0 - jaccard_threshold, distCol="jaccard_distance")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            "jaccard_distance",
+    max_bucket_size=None builds the fully lazy uncapped frame. With a cap,
+    the bands are checkpointed and hot (band, bh) buckets dropped
+    (drop_hot_buckets; cap_metrics records what it dropped): the cap adds
+    a bucket-count aggregate and a cold join on top of the band join's two
+    sides, so the signature -> bands lineage is materialized once instead
+    of re-run per consumer."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(F.concat(F.col(f"s{2*b}"), F.col(f"s{2*b+1}"))).alias("bh"),
+            )
+            for b in range(N_MINHASH // BAND_SIZE)
+        ]
+    )
+    bands = sig.select("doc_id", *keep, F.explode(band_structs).alias("x")).select(
+        "doc_id", *keep, F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
+    )
+    if max_bucket_size is not None:
+        bands = drop_hot_buckets(
+            bands.localCheckpoint(eager=True), max_bucket_size, ["band", "bh"],
+            metrics=cap_metrics,
         )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
+    return bands
+
+
+def band_join(bands: DataFrame, other: DataFrame | None = None) -> DataFrame:
+    """(doc_a, doc_b) for every (band, bh) bucket two docs share — a pair
+    sharing k bands appears k times, so callers distinct what they
+    project. With one band frame this is the self-join, canonicalized
+    doc_a < doc_b; with ``other`` it is the cross-side join (doc_a from
+    bands, doc_b from other, no ordering) — e.g. a new batch against a
+    reference corpus, never new x new. The join key is (band, bh), so the
+    shuffle is O(docs x bands), never O(docs^2)."""
+    a = bands.alias("a")
+    b = (bands if other is None else other).alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
+    if other is None:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    return a.join(b, on).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    )
+
+
+def minhash_candidates(
+    sig: DataFrame,
+    max_bucket_size: int | None = None,
+    cap_metrics: dict | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b) distinct banded-MinHash candidate pairs, doc_a <
+    doc_b, from a signature frame (doc_id, s0..s7, extra columns ignored);
+    the optional cap is minhash_bands'."""
+    return band_join(
+        minhash_bands(sig, max_bucket_size=max_bucket_size, cap_metrics=cap_metrics)
+    ).distinct()
+
+
+def jaccard_verify(
+    sh: DataFrame, cand: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs whose exact shingle
+    Jaccard is >= threshold, rounded to 6 places. ``sh`` is the (doc_id,
+    shingle) frame the candidates came from, ``sizes`` a (doc_id, n) frame
+    of per-doc shingle counts. Cost is O(candidates x shingles per doc),
+    decoupled from corpus size. Both verify sides shuffle xxhash64 tokens
+    (8-byte longs) instead of ~30-byte shingle strings: the intersection
+    needs only counts, and two distinct shingles of one pair collide in 64
+    bits with p ~ s^2/2^65 (s = shingles per doc); the string-exact oracle
+    certifies the equivalence."""
+    sh_tok = sh.select("doc_id", F.xxhash64("shingle").alias("tok"))
+    a = sh_tok.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
+    b = sh_tok.select(F.col("doc_id").alias("b_id"), F.col("tok").alias("tok_b"))
+    inter = (
+        cand.join(a, "doc_a")
+        .join(b, (F.col("doc_b") == F.col("b_id")) & (F.col("tok_a") == F.col("tok_b")))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    return (
+        inter.join(sa, "doc_a").join(sb, "doc_b")
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
 
@@ -92,18 +192,17 @@ def minhash_banded_candidate_pairs(
     frame — the production form of the registry entry dedup_minhash_lsh
     (which pins its corpus and shape for the DuckDB oracle), completing
     the bounded-output contract across all three emitter families
-    (MinHash / SimHash / hyperplane). Signatures and banding are the
-    IDENTICAL construction (queries.dedup._minhash_candidates: md5
-    string-min signatures, 4 bands x 2 rows, xxhash64 band keys), so at
-    shingle_n=3 on the documents table the uncapped output matches the
-    oracle-attested entry bit-for-bit (tests/test_simhash_banding.py).
-    max_bucket_size drops hot (band, band_hash) buckets before the
-    self-join: on boilerplate-heavy corpora identical shingle sets
-    produce identical band signatures, and those buckets are exactly the
-    quadratic-candidate mass (run exact dedup first — the round-12
-    ordering rule — and the cap only engages on the true adversarial
-    residue). cap_metrics: optional dict recording hot_buckets /
-    dropped_band_rows when the cap engages (see drop_hot_buckets).
+    (MinHash / SimHash / hyperplane). md5 string-min signatures, 4 bands x
+    2 rows, xxhash64 band keys: at shingle_n=3 on the documents table the
+    uncapped output matches the oracle-attested entry bit-for-bit
+    (tests/test_simhash_banding.py). max_bucket_size drops hot (band,
+    band_hash) buckets before the self-join (see minhash_bands): on
+    boilerplate-heavy corpora identical shingle sets produce identical
+    band signatures, and those buckets are exactly the quadratic-candidate
+    mass (run exact dedup first — the round-12 ordering rule — and the cap
+    only engages on the true adversarial residue). cap_metrics: optional
+    dict recording hot_buckets / dropped_band_rows when the cap engages
+    (see drop_hot_buckets).
 
     max_bucket_size='auto' is NOT supported here (unlike the simhash /
     hyperplane emitters): minhash bands key on xxhash64 of the band
@@ -112,8 +211,6 @@ def minhash_banded_candidate_pairs(
     occupancy-derived cap would degenerate to the bare factor and drop
     real near-dup groups. Choose an explicit cap from the corpus's
     duplicate-group size distribution instead."""
-    from glue_etl_framework_spark.queries.dedup import _minhash_candidates
-
     if max_bucket_size == "auto":
         raise ValueError(
             "max_bucket_size='auto' is occupancy-derived and does not apply "
@@ -127,7 +224,7 @@ def minhash_banded_candidate_pairs(
         .select("doc_id", F.explode("shingles").alias("shingle"))
         .distinct()
     )
-    return _minhash_candidates(sh, max_bucket_size=max_bucket_size, cap_metrics=cap_metrics)
+    return minhash_candidates(minhash_signatures(sh), max_bucket_size, cap_metrics)
 
 
 def connected_component_labels(
@@ -135,7 +232,6 @@ def connected_component_labels(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    on_exhaustion: str = "fallback",
     metrics: dict | None = None,
     a_col: str = "id_a",
     b_col: str = "id_b",
@@ -153,20 +249,14 @@ def connected_component_labels(
     early convergence still exits in O(actual rounds) while chain-shaped
     graphs converge instead of truncating.
 
-    ``on_exhaustion`` decides what happens when the round budget runs out
-    WITHOUT convergence (labels would then not be final component minima —
-    silently wrong components, the r11 twelfth-probe failure mode):
-
-    - ``"fallback"`` (default): warn, then recompute via
-      connected_component_labels_twophase — O(log^2 n) rounds regardless
-      of graph diameter, so the returned labels are always final. The
-      warning survives so callers learn their graph shape defeats
-      propagation (two-phase was also measured FASTER once diameter bites:
-      7.3 s vs 12.3 s at 10x — probes/cc_twophase_compare_r11.txt).
-    - ``"raise"``: RuntimeError — for pipelines that must not absorb the
-      two-phase recompute cost implicitly.
-    - ``"warn"``: return the non-final labels with only the warning — the
-      pre-r12 behavior, opt-in only.
+    When the round budget runs out WITHOUT convergence (labels would then
+    not be final component minima — silently wrong components, the r11
+    twelfth-probe failure mode), it warns, then recomputes via
+    connected_component_labels_twophase — O(log^2 n) rounds regardless of
+    graph diameter, so the returned labels are always final. The warning
+    survives so callers learn their graph shape defeats propagation
+    (two-phase was also measured FASTER once diameter bites: 7.3 s vs
+    12.3 s at 10x — probes/cc_twophase_compare_r11.txt).
 
     A run that converges within the budget never warns, never falls back,
     and builds the identical plan it always did (the oracle-attested
@@ -177,10 +267,6 @@ def connected_component_labels(
     (VERDICT r13 item 3). These are driver-side loop counters the
     algorithm already pays for: recording them adds ZERO Spark jobs and
     leaves the plan untouched."""
-    if on_exhaustion not in ("fallback", "raise", "warn"):
-        raise ValueError(
-            f"on_exhaustion must be 'fallback', 'raise', or 'warn', got {on_exhaustion!r}"
-        )
     # Materialize the edge list ONCE: its lineage (often a full MinHash/LSH
     # candidate pipeline) would otherwise re-execute inside EVERY round's
     # join — measured 5x end-to-end on the minhash graph at sf0.1.
@@ -255,53 +341,45 @@ def connected_component_labels(
     if metrics is not None:
         metrics["cc_rounds"] = rounds
         metrics["cc_converged"] = converged
-        metrics["cc_fallback"] = not converged and on_exhaustion == "fallback"
+        metrics["cc_fallback"] = not converged
     if not converged:
         # Propagation needs O(component diameter) rounds; exhausting the
         # budget means some labels are NOT yet the component minimum —
         # returning them silently would hand the caller wrong components
-        # (r11). Warn loudly; then fall back or raise per on_exhaustion —
-        # warned-but-wrong output is opt-in only (r12).
+        # (r11). Warn loudly, then fall back.
         import warnings
 
-        resolution = {
-            "fallback": "falling back to connected_component_labels_twophase "
-            "(O(log^2 n) rounds regardless of diameter; it warns separately "
-            "if its own round budget were ever to run out)",
-            "raise": "raising",
-            "warn": "returning them anyway (on_exhaustion='warn')",
-        }[on_exhaustion]
-        msg = (
+        warnings.warn(
             f"connected_component_labels exhausted max_iterations="
             f"{max_iterations} before converging — propagation's labels are "
             f"NOT final component minima (the graph's diameter exceeds the "
-            f"round budget); {resolution}."
+            f"round budget); falling back to connected_component_labels_twophase "
+            f"(O(log^2 n) rounds regardless of diameter; it warns separately "
+            f"if its own round budget were ever to run out).",
+            UserWarning,
+            stacklevel=2,
         )
-        if on_exhaustion == "raise":
-            raise RuntimeError(msg)
-        warnings.warn(msg, UserWarning, stacklevel=2)
-        if on_exhaustion == "fallback":
-            # Hand twophase the already-materialized edge set, NOT the raw
-            # pairs frame: pairs' lineage is often a full MinHash/LSH
-            # candidate pipeline (re-executing it measured 5x end-to-end,
-            # see the edges checkpoint above), and edges is equivalent
-            # input — twophase canonicalizes/distincts its edges anyway.
-            # SEED it with the partially-propagated labels as extra edges
-            # (ADVICE r12): label(n) is the min id reached from n along
-            # real edges, so (n, label(n)) connects nodes already in one
-            # component — the component partition is unchanged, but star
-            # contraction starts from a graph the exhausted rounds already
-            # partially collapsed (long chains become shortcuts to the
-            # frontier minimum) instead of discarding that work entirely.
-            label_edges = labels.filter(F.col("node") != F.col("label")).select(
-                F.col("node").alias("id_a"), F.col("label").alias("id_b")
-            )
-            return connected_component_labels_twophase(
-                nodes,
-                edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-                .union(label_edges),
-                id_col,
-            )
+        # Hand twophase the already-materialized edge set, NOT the raw
+        # pairs frame: pairs' lineage is often a full MinHash/LSH
+        # candidate pipeline (re-executing it measured 5x end-to-end,
+        # see the edges checkpoint above), and edges is equivalent
+        # input — twophase canonicalizes/distincts its edges anyway.
+        # SEED it with the partially-propagated labels as extra edges
+        # (ADVICE r12): label(n) is the min id reached from n along
+        # real edges, so (n, label(n)) connects nodes already in one
+        # component — the component partition is unchanged, but star
+        # contraction starts from a graph the exhausted rounds already
+        # partially collapsed (long chains become shortcuts to the
+        # frontier minimum) instead of discarding that work entirely.
+        label_edges = labels.filter(F.col("node") != F.col("label")).select(
+            F.col("node").alias("id_a"), F.col("label").alias("id_b")
+        )
+        return connected_component_labels_twophase(
+            nodes,
+            edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+            .union(label_edges),
+            id_col,
+        )
     all_nodes = nodes.select(F.col(id_col).alias("node")).distinct()
     return all_nodes.join(labels, "node", "left").select(
         "node", F.coalesce("label", F.col("node")).alias("label")
@@ -313,20 +391,18 @@ def dedup_keep_representative(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    on_exhaustion: str = "fallback",
     metrics: dict | None = None,
     a_col: str = "id_a",
     b_col: str = "id_b",
 ) -> DataFrame:
     """Drop near-duplicates, keeping one representative (min id) per
     connected component of the pair graph (see
-    connected_component_labels; on_exhaustion and metrics pass through,
-    so the default can never drop documents based on non-final labels
-    and a funnel audit reads the CC round count from the same dict the
-    emitter levers wrote their dropped mass into)."""
+    connected_component_labels: labels are always final component minima,
+    so no document is dropped on a non-final label; metrics passes
+    through, so a funnel audit reads the CC round count from the same dict
+    the emitter levers wrote their dropped mass into)."""
     labels = connected_component_labels(
-        df, pairs, id_col, max_iterations, on_exhaustion, metrics=metrics,
-        a_col=a_col, b_col=b_col,
+        df, pairs, id_col, max_iterations, metrics=metrics, a_col=a_col, b_col=b_col,
     )
     keep = labels.filter(F.col("node") == F.col("label")).select(F.col("node").alias(id_col))
     return df.join(keep, id_col, "left_semi")

@@ -862,12 +862,12 @@ def agg_kmv_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact branch exists to measure estimator error at test scale; at
     100 TB only the sketches ship. md5-ordered bottom-k is
     engine-portable, so the full sketch contents are oracle-checked."""
-    d = t(spark, sf_dir, "documents")
-    from glue_etl_framework_spark.queries.dedup import SHINGLE_REGEX
+    from glue_etl_framework_spark.ext.dedup import shingle_array
 
+    d = t(spark, sf_dir, "documents")
     sh = (
         d.filter(F.col("source").isin("src0", "src1"))
-        .select("source", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
+        .select("source", F.explode(shingle_array()).alias("shingle"))
         .select("source", F.md5("shingle").alias("h"))
         .distinct()
     )

@@ -15,11 +15,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from glue_etl_framework_spark.ext.dedup import (
+    BAND_SIZE,
+    N_MINHASH,
+    band_join,
+    minhash_bands,
+    minhash_signatures,
+    shingle_rows,
+)
 from glue_etl_framework_spark.queries import register, t
-from glue_etl_framework_spark.queries.dedup import BAND_SIZE, N_MINHASH, SHINGLE
+from glue_etl_framework_spark.queries.dedup import SHINGLE
 
 MIN_TOKENS, MAX_TOKENS = 20, 1000
 MIN_DIVERSITY = 0.3
+
+
+def _neardup_losers(bands: DataFrame) -> DataFrame:
+    """(doc_id) of every doc sharing a band bucket with a lower id — the
+    larger id of each MinHash candidate pair. Joined as (larger, smaller)
+    so the loser comes from the join's streamed side, whose doc_id
+    partitioning the distinct reuses; projecting the build side's id
+    instead costs one more exchange."""
+    return (
+        band_join(bands, bands)
+        .filter(F.col("doc_b") < F.col("doc_a"))
+        .select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+    )
 
 
 def _curation_sql() -> str:
@@ -80,7 +102,6 @@ def _curation_sql() -> str:
 def pipeline_training_data_curation(
     spark: SparkSession,
     sf_dir: str,
-    persist_intermediate: bool = False,
     max_bucket_size: int | None = None,
     metrics: dict | None = None,
 ) -> DataFrame:
@@ -90,9 +111,9 @@ def pipeline_training_data_curation(
        predicates, fused into the parquet read);
     2. exact dedup — keep the lowest doc_id per normalized content hash (one
        shuffle on a 32-byte key);
-    3. near-dup removal — MinHash/LSH candidate pairs among survivors, drop
-       every doc that collides with a lower-id doc (banded self-join, shuffle
-       keyed on (band, hash) — never all-pairs);
+    3. near-dup removal — MinHash/LSH candidate pairs among survivors
+       (ext.dedup.band_join), drop the larger id of every pair
+       (banded self-join, shuffle keyed on (band, hash) — never all-pairs);
     4. emit the curated corpus with token counts and a content hash.
 
     Deterministic end to end (md5 hashing, integer counts, lowest-id keep
@@ -100,11 +121,12 @@ def pipeline_training_data_curation(
 
     max_bucket_size: optional bounded-output lever for stage 3 — drop
     over-occupied (band, bh) buckets before the candidate self-join
-    (ext.dedup.drop_hot_buckets; EXPLICIT int only, like
+    (ext.dedup.minhash_bands; EXPLICIT int only, like
     minhash_banded_candidate_pairs: hash-space banding has no occupancy
     target for an 'auto' cap). Docs whose every collision is inside hot
     buckets then survive — the recall trade the cap always makes,
-    audited via ``metrics``.
+    audited via ``metrics``. The cap checkpoints the bands first (one
+    eager job), as every MinHash cap does.
 
     metrics: optional per-stage funnel audit (VERDICT r13 item 3) — ONE
     place to read the whole run's removal and recall exposure:
@@ -159,17 +181,12 @@ def pipeline_training_data_curation(
     # (a diamond whose two consumers prune DIFFERENT columns, so their
     # exchanges never match for AQE reuse and the scan+quality+min_by agg
     # ran twice). Eagerly checkpointed since r15 (interleaved A/B: 2.96s
-    # -> 2.04s min-of-medians at sf0.1, probes/abx_r15opt_ckpt2.txt);
-    # persist_intermediate remains the caller-facing knob for
-    # cluster-scale storage-level control. DATA_SIZED (r16): survivor text
-    # rows are corpus-proportional — level parameterized, evictable default (ckpt policy).
+    # -> 2.04s min-of-medians at sf0.1, probes/abx_r15opt_ckpt2.txt).
+    # DATA_SIZED (r16): survivor text rows are corpus-proportional — level
+    # parameterized, evictable default (ckpt policy).
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     exact = checkpoint_shared(exact, size_class=DATA_SIZED)
-    if persist_intermediate:
-        from pyspark.storagelevel import StorageLevel
-
-        exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
     if metrics is not None:
         # `exact` is already checkpointed above; the count reads blocks.
         n_exact = exact.count()
@@ -177,46 +194,12 @@ def pipeline_training_data_curation(
             metrics["input_docs"] - metrics["quality_removed"] - n_exact
         )
 
-    # one-pass regex shingling — see queries.dedup.SHINGLE_REGEX for the
-    # equivalence argument and its word-character assumption
-    from glue_etl_framework_spark.queries.dedup import SHINGLE_REGEX
-
-    sh = (
-        exact.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct()
-    )
-    from glue_etl_framework_spark.queries.dedup import _minhash_sig_cols
-
-    sig = sh.groupBy("doc_id").agg(*_minhash_sig_cols())
-    # xxhash64 band keys where the oracle keys on md5 strings — identical
-    # buckets over the same md5-exact signature pairs (see
-    # dedup._minhash_candidates, round 10).
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat(F.col(f"s{2*b}"), F.col(f"s{2*b+1}"))).alias("bh"),
-            )
-            for b in range(N_MINHASH // BAND_SIZE)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("x")).select(
-        "doc_id", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
-    )
-    if max_bucket_size is not None:
-        from glue_etl_framework_spark.ext.dedup import drop_hot_buckets
-
-        bands = drop_hot_buckets(bands, max_bucket_size, ["band", "bh"], metrics=metrics)
-    a, b = bands.alias("a"), bands.alias("b")
-    losers = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("b.doc_id") < F.col("a.doc_id")),
+    losers = _neardup_losers(
+        minhash_bands(
+            minhash_signatures(shingle_rows(exact, "doc_id")),
+            max_bucket_size=max_bucket_size,
+            cap_metrics=metrics,
         )
-        .select(F.col("a.doc_id").alias("doc_id"))
-        .distinct()
     )
     if metrics is not None:
         losers = losers.localCheckpoint(eager=False)
@@ -526,11 +509,7 @@ def pipeline_incremental_ingest(
 
 
 def _dedup_impact_sql() -> str:
-    from glue_etl_framework_spark.queries.dedup import (
-        BAND_SIZE,
-        N_MINHASH,
-        _minhash_sig_sql,
-    )
+    from glue_etl_framework_spark.queries.dedup import _minhash_sig_sql
 
     sigs = ",\n             ".join(_minhash_sig_sql())
     bands = "\n        UNION ALL ".join(
@@ -603,15 +582,6 @@ def curation_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join among exact survivors, two anti-join flags folded into one
     per-source aggregate. All counts are exact integers; output is
     bounded by |sources|."""
-    from pyspark.sql import Window as W
-
-    from glue_etl_framework_spark.queries.dedup import (
-        BAND_SIZE,
-        N_MINHASH,
-        SHINGLE_REGEX,
-        _minhash_sig_cols,
-    )
-
     d = t(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id",
@@ -621,37 +591,11 @@ def curation_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
     )
     exact_keep = docs.groupBy("nh").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    sh = (
-        docs.join(exact_keep, "doc_id")
-        .select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct()
-    )
-    sig = sh.groupBy("doc_id").agg(*_minhash_sig_cols())
-    # xxhash64 band keys (see dedup._minhash_candidates, round 10)
-    band_rows = []
-    for b in range(N_MINHASH // BAND_SIZE):
-        band_rows.append(
-            sig.select(
-                "doc_id",
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat(F.col(f"s{2*b}"), F.col(f"s{2*b+1}"))).alias("bh"),
-            )
-        )
-    bands = band_rows[0]
-    for br in band_rows[1:]:
-        bands = bands.unionAll(br)
-    a_side = bands.select(F.col("doc_id").alias("drop_id"), "band", "bh")
-    b_side = bands.select(F.col("doc_id").alias("keep_id"), "band", "bh")
-    losers = (
-        a_side.join(b_side, ["band", "bh"])
-        .filter(F.col("keep_id") < F.col("drop_id"))
-        .select("drop_id")
-        .distinct()
-    )
+    sh = shingle_rows(docs.join(exact_keep, "doc_id"), "doc_id")
+    losers = _neardup_losers(minhash_bands(minhash_signatures(sh)))
     status = (
         docs.join(exact_keep.withColumn("ek", F.lit(1)), "doc_id", "left")
-        .join(losers.withColumnRenamed("drop_id", "doc_id").withColumn("lz", F.lit(1)),
-              "doc_id", "left")
+        .join(losers.withColumn("lz", F.lit(1)), "doc_id", "left")
         .select(
             "source",
             "n_toks",

@@ -4,9 +4,10 @@ normalized-exact, n-gram Jaccard, MinHash+LSH, SimHash.
 Design for 100 TB: every variant avoids the all-pairs cross product —
 exact/normalized dedup is one hash-groupBy; MinHash/LSH and SimHash band
 candidates so the self-join only touches same-bucket rows. All hashing uses
-md5 (bit-identical across engines) so each operator is fully oracle-checked;
-the pyspark.ml MinHashLSH variant lives in glue_etl_framework_spark.ext.dedup
-(pytest-verified, since ml seeds aren't portable SQL).
+md5 (bit-identical across engines) so each operator is fully oracle-checked.
+The MinHash entries are fixed-parameter calls into the one banded-MinHash
+implementation in glue_etl_framework_spark.ext.dedup; this module keeps
+their DuckDB oracle SQL (_SHINGLE_SQL, _minhash_sig_sql, _minhash_band_sql).
 """
 
 from __future__ import annotations
@@ -14,11 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from glue_etl_framework_spark.ext.dedup import (
+    BAND_SIZE,
+    N_MINHASH,
+    jaccard_verify,
+    minhash_candidates,
+    minhash_signature_aggs,
+    minhash_signatures,
+    shingle_array,
+    shingle_rows,
+)
 from glue_etl_framework_spark.queries import register, t
 
-N_MINHASH = 8     # signature length
-BAND_SIZE = 2     # rows per LSH band -> 4 bands
-SHINGLE = 3       # word n-gram size
+SHINGLE = 3       # word n-gram size of the oracle SQL
 
 
 @register(
@@ -73,23 +82,6 @@ _SHINGLE_SQL = """
 """
 
 
-def _minhash_sig_cols():
-    """Spark twin of _minhash_sig_sql: 8 chunked-md5 signature aggregates."""
-    h1 = F.md5("shingle")
-    h2 = F.md5(F.concat(F.lit("x:"), F.col("shingle")))
-    return [
-        F.min(F.substring(h1 if i < 4 else h2, 1 + 8 * (i % 4), 8)).alias(f"s{i}")
-        for i in range(N_MINHASH)
-    ]
-
-
-# Token-start anchor: a position at ^ or just after a space — EXACTLY the
-# token positions of the oracle's split-on-space formulation, for any token
-# content (an earlier \b-anchored variant silently diverged on
-# punctuation-leading tokens; parity on punctuation-heavy text is pinned by
-# tests/test_text_properties.py::test_shingle_regex_matches_split_semantics).
-SHINGLE_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=((\\S+ ){2}\\S+))', 1)"
-
 # Document-frequency ceiling for the PAIRWISE shingle self-joins
 # (dedup_ngram_jaccard, llmops.dedup_containment_pairs). A shingle shared by
 # k documents alone yields k^2 candidate pairs, so one stop-phrase trigram
@@ -106,18 +98,10 @@ SHINGLE_DF_CAP = 8192
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-3-gram shingles per document. Overlapping 3-grams come
-    from ONE regex pass (token-start lookbehind + lookahead capture) —
-    measured 3.6x faster at sf0.1 than split + sequence + slice +
-    array_join, which allocates four intermediate arrays per row. Produces
-    the IDENTICAL shingle set as the split-based formulation (which the
-    DuckDB oracle keeps, since RE2 lacks lookaround) for any token content,
-    including punctuation-leading and pure-punctuation tokens."""
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct()
-    )
+    """Distinct word-3-gram (doc_id, shingle) rows of the documents table
+    (ext.dedup.shingle_rows — the same shingle set as the oracle's
+    split-based _SHINGLE_SQL for any token content)."""
+    return shingle_rows(t(spark, sf_dir, "documents"), "doc_id")
 
 
 @register(
@@ -224,81 +208,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows): candidate pairs collide on at least one band. The self-join key
     is (band, band_hash) so only same-bucket docs are compared — the
     shuffle is O(docs x bands), never O(docs^2). Recall/threshold behavior
-    is property-tested in tests/ against exact Jaccard. Signatures come
-    from two md5 digests chunked into 32-bit pieces (see _minhash_sig_sql)
-    so the per-shingle hashing cost is 2 digests, not 8."""
-    return _minhash_candidates(_shingles(spark, sf_dir))
-
-
-def _minhash_candidates(
-    sh: DataFrame,
-    max_bucket_size: int | None = None,
-    cap_metrics: dict | None = None,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """Banded-LSH candidate pairs from a (doc_id, shingle) frame (the body
-    of dedup_minhash_lsh, reusable against a shared/materialized shingle
-    set — see dedup_minhash_verified). max_bucket_size=None (every
-    registry caller) builds the byte-identical uncapped plan;
-    ext.dedup.minhash_banded_candidate_pairs exposes the cap
-    (drop_hot_buckets on the (band, bh) key) for quadratic-density
-    corpora — see the round-12 bounded-output recipe.
-
-    Band-key compression (round 10, VERDICT r09 item 6): the bucket key is
-    xxhash64 of the band's signature pair — an 8-byte long — where the
-    oracle keys on md5(s_2b || s_2b+1), a 32-char string. Both are
-    injective-in-practice functions of the SAME signature pair (which
-    stays md5-of-shingle-string, reproduced exactly by the oracle), so the
-    bucket partitions are identical and the output pair set matches the
-    oracle's unless two distinct signature pairs collide in 64 bits within
-    one band (p ~ n_docs^2/2^65 per band — the same documented trade as
-    the r9 shingle-token hashing, certified end-to-end by the driver
-    hash-match). The self-join shuffle moves ~4x less key volume and skips
-    4 md5 digests per doc.
-
-    ``sig``: optional precomputed signature frame (doc_id, s0..s7, extra
-    columns ignored) — callers that also need per-doc shingle counts fuse
-    the two into ONE aggregate over the shingle stream and pass it here
-    (r16: dedup_minhash_verified; one map pass + one doc_id exchange
-    instead of two of each)."""
-    if sig is None:
-        sig = sh.groupBy("doc_id").agg(*_minhash_sig_cols())
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat(F.col(f"s{2*b}"), F.col(f"s{2*b+1}"))).alias("bh"),
-            )
-            for b in range(N_MINHASH // BAND_SIZE)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("x")).select(
-        "doc_id", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
-    )
-    if max_bucket_size is not None:
-        from glue_etl_framework_spark.ext.dedup import drop_hot_buckets
-
-        # The cap adds a bucket-count aggregate and a cold join on top of
-        # the self-join's two sides — materialize the shingle -> signature
-        # -> bands lineage once instead of re-running it per consumer
-        # (same reasoning as the capped branches of the other two emitter
-        # families). Registry callers (max_bucket_size=None) keep the
-        # byte-identical uncapped plan.
-        bands = drop_hot_buckets(
-            bands.localCheckpoint(eager=True), max_bucket_size, ["band", "bh"],
-            metrics=cap_metrics,
-        )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    is property-tested in tests/ against exact Jaccard. The same pairs as
+    ext.dedup.minhash_banded_candidate_pairs on the documents table, minus
+    that function's per-row array_distinct of the shingles (the distinct
+    after the explode already dedups): calling it directly measured 11%
+    and 28% slower at sf0.1 in two interleaved A/B bursts on 4 cores."""
+    return minhash_candidates(minhash_signatures(_shingles(spark, sf_dir)))
 
 
 N_SIMHASH_BITS = 32
@@ -491,36 +406,10 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sh = checkpoint_shared(_shingles(spark, sf_dir), size_class=DATA_SIZED)
     per_doc = checkpoint_shared(
-        sh.groupBy("doc_id").agg(*_minhash_sig_cols(), F.count("*").alias("n")),
+        sh.groupBy("doc_id").agg(*minhash_signature_aggs(), F.count("*").alias("n")),
         size_class=DATA_SIZED,
     )
-    cand = _minhash_candidates(sh, sig=per_doc)
-    sizes = per_doc.select("doc_id", "n")
-    # Verify-stage token compression (round 10, VERDICT r09 item 6): the
-    # exact-Jaccard verify only needs intersection COUNTS, so both verify
-    # sides shuffle xxhash64 tokens (8-byte longs) instead of ~30-byte
-    # shingle strings — the r9 token trick, applied downstream of the
-    # signature stage, which stays md5-of-STRING so the oracle reproduces
-    # it bit-exactly. Same collision arithmetic as
-    # dedup_prefix_filter_jaccard's docstring; the string-exact oracle
-    # certifies the equivalence through the driver hash-match.
-    sh_tok = sh.select("doc_id", F.xxhash64("shingle").alias("tok"))
-    a = sh_tok.select(F.col("doc_id").alias("doc_a"), F.col("tok").alias("tok_a"))
-    b = sh_tok.select(F.col("doc_id").alias("b_id"), F.col("tok").alias("tok_b"))
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, (F.col("doc_b") == F.col("b_id")) & (F.col("tok_a") == F.col("tok_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return jaccard_verify(sh, minhash_candidates(per_doc), per_doc, 0.5)
 
 
 def _components_sql() -> str:
@@ -642,7 +531,7 @@ def dedup_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame
     the LSH operator); joining it twice onto the verified pairs is keyed
     on doc id."""
     v = dedup_minhash_verified(spark, sf_dir)
-    sig = _shingles(spark, sf_dir).groupBy("doc_id").agg(*_minhash_sig_cols())
+    sig = minhash_signatures(_shingles(spark, sf_dir))
     agree_col = sum(
         (F.when(F.col(f"a_s{i}") == F.col(f"b_s{i}"), 1).otherwise(0) for i in range(1, N_MINHASH)),
         F.when(F.col("a_s0") == F.col("b_s0"), 1).otherwise(0),
@@ -751,12 +640,12 @@ def bloom_shingle_frames(incoming: DataFrame, ref_docs: DataFrame):
     them (eager checkpoints here measured slower — the
     dedup_prefix_filter_jaccard lesson, probes/abx_r15opt_main.txt)."""
     ref = (
-        ref_docs.select(F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
+        ref_docs.select(F.explode(shingle_array()).alias("shingle"))
         .select(F.md5("shingle").alias("h"))
         .distinct()
     )
     new_sh = (
-        incoming.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
+        incoming.select("doc_id", F.explode(shingle_array()).alias("shingle"))
         .select("doc_id", F.md5("shingle").alias("h"))
         .distinct()
     )

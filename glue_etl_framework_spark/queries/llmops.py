@@ -17,11 +17,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from glue_etl_framework_spark.ext.dedup import (
+    BAND_SIZE,
+    N_MINHASH,
+    band_join,
+    jaccard_verify,
+    minhash_bands,
+    minhash_signature_aggs,
+    shingle_array,
+    shingle_rows,
+)
 from glue_etl_framework_spark.queries import register, t
-
-# 2-token sliding window at split-on-space token positions (same anchor
-# discipline as queries.dedup.SHINGLE_REGEX — exact for any token content).
-BIGRAM_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=(\\S+ \\S+))', 1)"
 
 _BIGRAM_SQL = """
       SELECT doc_id, unnest(list_transform(range(1, length(w)),
@@ -56,7 +62,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     both partial+final hash aggregates, linear at any corpus size. Docs
     with < 2 tokens have no bigrams and are (consistently) absent."""
     d = t(spark, sf_dir, "documents")
-    bg = d.select("doc_id", F.explode(F.expr(BIGRAM_REGEX)).alias("bigram"))
+    bg = d.select("doc_id", F.explode(shingle_array(n=2)).alias("bigram"))
     cnt = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
     ratio = F.max("c").cast("double") / F.sum("c")
     return cnt.groupBy("doc_id").agg(
@@ -104,13 +110,8 @@ def curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a per-doc count and a left join so clean docs report 0 — the same
     banded-join scale shape as dedup_against_corpus, but at n-gram rather
     than whole-document granularity."""
-    from glue_etl_framework_spark.queries.dedup import SHINGLE_REGEX
-
     d = t(spark, sf_dir, "documents")
-    sh = (
-        d.select("doc_id", "source", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct()
-    )
+    sh = shingle_rows(d, "doc_id", "source")
     bench = sh.filter(F.col("source") == BENCH_SOURCE).select("shingle").distinct()
     cand = sh.filter(F.col("source") != BENCH_SOURCE).select("doc_id", "shingle")
     hits = cand.join(bench, "shingle").groupBy("doc_id").agg(F.count("*").alias("n_shared"))
@@ -203,7 +204,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     both count aggregates. Fixed-point integer log-probs (round(ln*1e6))
     make every sum order-independent and oracle-hashable."""
     d = t(spark, sf_dir, "documents")
-    bg = d.select("doc_id", F.explode(F.expr(BIGRAM_REGEX)).alias("bigram"))
+    bg = d.select("doc_id", F.explode(shingle_array(n=2)).alias("bigram"))
     # Three consumers (both frequency aggregates + the scoring join), a
     # shared subtree with no exchange — the regex explode ran three
     # times. Eager checkpoint = one extraction pass (r15,
@@ -408,10 +409,6 @@ def quality_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *gopher_audit_cols("text"))
 
 
-# 3-token sliding window, same token-start anchor discipline as BIGRAM_REGEX
-# (property-pinned to the split formulation in tests/test_text_properties.py).
-TRIGRAM_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=(\\S+ \\S+ \\S+))', 1)"
-
 _TRIGRAM_SQL = """
       SELECT doc_id, unnest(list_transform(range(1, length(w) - 1),
                                            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS gram
@@ -447,7 +444,7 @@ def dedup_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     changing semantics. Docs with < 3 tokens have no trigrams and are
     (consistently) absent from the output."""
     d = t(spark, sf_dir, "documents")
-    grams = d.select("doc_id", F.explode(F.expr(TRIGRAM_REGEX)).alias("gram"))
+    grams = d.select("doc_id", F.explode(shingle_array()).alias("gram"))
     pairs = grams.distinct()
     df_counts = pairs.groupBy("gram").agg(F.count("*").alias("n_docs"))
     shared = F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0))
@@ -891,11 +888,7 @@ MINHASH_REF_JACCARD = 0.5
 
 
 def _against_corpus_sql() -> str:
-    from glue_etl_framework_spark.queries.dedup import (
-        BAND_SIZE,
-        N_MINHASH,
-        _minhash_sig_sql,
-    )
+    from glue_etl_framework_spark.queries.dedup import _minhash_sig_sql
 
     sigs = ", ".join(_minhash_sig_sql())
     bands = {
@@ -964,78 +957,25 @@ def dedup_minhash_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning splits the aggregate back per consumer and the
     exchanges stop matching (see dedup_minhash_verified)."""
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-    from glue_etl_framework_spark.queries.dedup import (
-        BAND_SIZE,
-        N_MINHASH,
-        SHINGLE_REGEX,
-        _minhash_sig_cols,
-    )
 
     d = t(spark, sf_dir, "documents")
-    sh = checkpoint_shared(
-        d.select("doc_id", "source", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle"))
-        .distinct(),
-        size_class=DATA_SIZED,
-    )
+    sh = checkpoint_shared(shingle_rows(d, "doc_id", "source"), size_class=DATA_SIZED)
     per_doc = checkpoint_shared(
         sh.groupBy("doc_id").agg(
-            *_minhash_sig_cols(),
+            *minhash_signature_aggs(),
             F.count("*").alias("n"),
             # constant per doc (a doc has ONE source); max() is deterministic
             F.max("source").alias("source"),
         ),
         size_class=DATA_SIZED,
     )
-    # Band keys are xxhash64 longs where the oracle keys on md5 strings —
-    # identical bucket partitions over the same md5-exact signature pairs
-    # (see dedup._minhash_candidates, round 10).
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat(F.col(f"s{2*b}"), F.col(f"s{2*b+1}"))).alias("bh"),
-            )
-            for b in range(N_MINHASH // BAND_SIZE)
-        ]
-    )
-    bands = per_doc.select("doc_id", "source", F.explode(band_structs).alias("x")).select(
-        "doc_id", "source", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
-    )
-    bands_new = bands.filter(F.col("source") != BENCH_SOURCE).drop("source").alias("n")
-    bands_ref = bands.filter(F.col("source") == BENCH_SOURCE).drop("source").alias("r")
-    cand = (
-        bands_new.join(
-            bands_ref,
-            (F.col("n.band") == F.col("r.band")) & (F.col("n.bh") == F.col("r.bh")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_id"), F.col("r.doc_id").alias("corpus_doc_id")
-        )
-        .distinct()
-    )
-    sizes = per_doc.select("doc_id", "n")
-    # Verify-stage token compression (round 10): exact-Jaccard counts over
-    # xxhash64 tokens instead of shingle strings — 8-byte longs through
-    # both verify shuffles; signatures upstream stay md5-of-string (see
-    # dedup.dedup_minhash_verified and the collision arithmetic in
-    # dedup.dedup_prefix_filter_jaccard's docstring).
-    sh_tok = sh.select("doc_id", F.xxhash64("shingle").alias("tok"))
-    a = sh_tok.select(F.col("doc_id").alias("a_id"), F.col("tok").alias("tok_a"))
-    b = sh_tok.select(F.col("doc_id").alias("b_id"), F.col("tok").alias("tok_b"))
-    inter = (
-        cand.join(a, F.col("doc_id") == F.col("a_id"))
-        .join(b, (F.col("corpus_doc_id") == F.col("b_id")) & (F.col("tok_a") == F.col("tok_b")))
-        .groupBy("doc_id", "corpus_doc_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_id"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("corpus_doc_id"), F.col("n").alias("nb"))
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        inter.join(sa, "doc_id")
-        .join(sb, "corpus_doc_id")
-        .filter(jac >= MINHASH_REF_JACCARD)
-        .select("doc_id", "corpus_doc_id", F.round(jac, 6).alias("jaccard"))
+    bands = minhash_bands(per_doc, "source")
+    cand = band_join(
+        bands.filter(F.col("source") != BENCH_SOURCE).drop("source"),
+        bands.filter(F.col("source") == BENCH_SOURCE).drop("source"),
+    ).distinct()
+    return jaccard_verify(sh, cand, per_doc, MINHASH_REF_JACCARD).select(
+        F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("corpus_doc_id"), "jaccard"
     )
 
 
@@ -1301,7 +1241,6 @@ def sample_reservoir_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # length used by suffix-array substring dedup scaled down to the fixture
 # corpus (production uses 50-token windows; the plan shape is identical).
 WIN_K = 8
-WIN_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=((\\S+ ){7}\\S+))', 1)"
 DUP_WIN_FLAG = 0.5  # flag docs with >= 50% of their windows shared
 
 
@@ -1358,7 +1297,7 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     w = checkpoint_shared(
-        d.select("doc_id", F.explode(F.expr(WIN_REGEX)).alias("win"))
+        d.select("doc_id", F.explode(shingle_array(n=WIN_K)).alias("win"))
         .select("doc_id", F.md5("win").alias("h")),
         size_class=DATA_SIZED,
     )
@@ -1839,12 +1778,8 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds nothing to the corpus. Two keyed shuffles — per-shingle min
     aggregate (map-side combine) and the shingle equi-join back — both on
     the shingle key, linear at any corpus size."""
-    from glue_etl_framework_spark.queries.dedup import SHINGLE_REGEX
-
     d = t(spark, sf_dir, "documents")
-    sh = d.select(
-        "doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("shingle")
-    ).distinct()
+    sh = shingle_rows(d, "doc_id")
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum(F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0))
     return (
@@ -3125,8 +3060,6 @@ def part_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- asymmetric containment -----------------------------------------------
 
-TRIGRAM_REGEX = r"regexp_extract_all(text, '(?<=^| )(?=((\\S+ ){2}\\S+))', 1)"
-
 _TRIGRAM_SQL = """
       SELECT DISTINCT doc_id,
              unnest(list_transform(range(1, length(w) - 1),
@@ -3184,7 +3117,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     g0 = (
-        d.select("doc_id", F.explode(F.expr(TRIGRAM_REGEX)).alias("g"))
+        d.select("doc_id", F.explode(shingle_array()).alias("g"))
         .distinct()
         .select("doc_id", F.xxhash64("g").alias("g"))
     )
@@ -5420,7 +5353,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     participate in smoothing)."""
     d = t(spark, sf_dir, "documents")
     split_col = F.split(F.col("bigram"), " ")
-    bg = d.select(F.explode(F.expr(BIGRAM_REGEX)).alias("bigram")).select(
+    bg = d.select(F.explode(shingle_array(n=2)).alias("bigram")).select(
         split_col.getItem(0).alias("w1"), split_col.getItem(1).alias("w2")
     )
     c2 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))

@@ -782,11 +782,10 @@ SEMDEDUP_TAU = 0.35  # within-cluster cosine above which the higher id drops
 def _semdedup_band_members(v: DataFrame, assign: DataFrame) -> DataFrame:
     """(vec_id, cid, bidx, bv) band membership for SemDeDup's candidate
     join: the inline hyperplane banding (N_HYPERPLANES sign bits in
-    _BAND_BITS-wide bands) crossed with the coarse cell assignment.
-    Shared with tools_probe_semdedup_funnel so occupancy probes measure
-    the SAME bucketing the (cell, band) cap acts on (r15 review: the
-    probe previously copy-pasted this construction and could silently
-    diverge). Band values build as one SQL-string parse per band (r15
+    _BAND_BITS-wide bands) crossed with the coarse cell assignment —
+    the SAME bucketing the (cell, band) cap acts on, so an occupancy
+    probe should call this rather than copy it. Band values build as one
+    SQL-string parse per band (r15
     optimization — see ext.similarity.band_value_sql: the unrolled
     F.lit construction dominated the builder's wall in py4j calls)."""
     from glue_etl_framework_spark.ext.similarity import band_value_sql

@@ -31,8 +31,8 @@ def test_minhash_finds_planted_duplicates(spark, docs):
     # plant: copy of doc with ids shifted by 10_000 — exact dup (J=1.0)
     planted = base.withColumn("doc_id", F.col("doc_id") + 10_000)
     corpus = base.unionByName(planted)
-    pairs = D.minhash_candidate_pairs(corpus, jaccard_threshold=0.8)
-    found = {(r.id_a, r.id_b) for r in pairs.collect()}
+    pairs = D.minhash_banded_candidate_pairs(corpus)
+    found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     expected = {(r.doc_id, r.doc_id + 10_000) for r in base.collect()}
     recall = len(found & expected) / len(expected)
     assert recall >= 0.9, f"planted-dup recall {recall}"
@@ -42,10 +42,10 @@ def test_dedup_idempotent(spark, docs):
     base = docs.limit(40)
     planted = base.withColumn("doc_id", F.col("doc_id") + 10_000)
     corpus = base.unionByName(planted)
-    pairs = D.minhash_candidate_pairs(corpus, jaccard_threshold=0.8)
-    once = D.dedup_keep_representative(corpus, pairs)
-    pairs2 = D.minhash_candidate_pairs(once, jaccard_threshold=0.8)
-    twice = D.dedup_keep_representative(once, pairs2)
+    pairs = D.minhash_banded_candidate_pairs(corpus)
+    once = D.dedup_keep_representative(corpus, pairs, a_col="doc_a", b_col="doc_b")
+    pairs2 = D.minhash_banded_candidate_pairs(once)
+    twice = D.dedup_keep_representative(once, pairs2, a_col="doc_a", b_col="doc_b")
     assert once.count() == twice.count()  # dedup(dedup(X)) == dedup(X)
     assert once.count() <= base.count()  # all planted dups collapsed
     # representatives are the original (min) ids

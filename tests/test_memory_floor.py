@@ -120,9 +120,37 @@ def test_disk_headroom_warning():
     assert disk_headroom_warning("q", path="/nonexistent-dir") is None
 
 
-def test_disk_headroom_live_session(spark):
-    from glue_etl_framework_spark.session import warn_if_low_disk
+def test_disk_headroom_live_session(spark, monkeypatch):
+    """The live-session check reads the session's spill directory and is
+    silent above the floor, warning (naming that directory) below it —
+    whatever the free space of the host running the test."""
+    import shutil
+    from types import SimpleNamespace
 
-    # this box has plenty of headroom at rest; the call must be silent
-    # and must not raise regardless of spark.local.dir being unset
+    from glue_etl_framework_spark.session import (
+        PAIR_EMITTER_MIN_FREE_DISK_GIB,
+        warn_if_low_disk,
+    )
+
+    local_dir = (spark.conf.get("spark.local.dir", None) or "/tmp").split(",")[0]
+    statted = []
+
+    def fake_disk_usage(free_gib):
+        def disk_usage(path):
+            statted.append(path)
+            return SimpleNamespace(free=int(free_gib * 1024**3))
+
+        return disk_usage
+
+    monkeypatch.setattr(
+        shutil, "disk_usage", fake_disk_usage(PAIR_EMITTER_MIN_FREE_DISK_GIB + 1)
+    )
     assert warn_if_low_disk(spark, "q") is None
+    monkeypatch.setattr(
+        shutil, "disk_usage", fake_disk_usage(PAIR_EMITTER_MIN_FREE_DISK_GIB / 2)
+    )
+    with pytest.warns(UserWarning, match="GiB free") as caught:
+        msg = warn_if_low_disk(spark, "q")
+    assert msg is not None and local_dir in msg and "'q'" in msg
+    assert str(caught[0].message) == msg
+    assert statted == [local_dir, local_dir]

@@ -169,26 +169,20 @@ def test_data_sized_level_env_override(monkeypatch):
 
 
 def test_no_persist_in_registry_query_paths():
-    """persist()/cache() must never appear unconditionally in a registry
-    builder path: CacheManager matches canonicalized plans, so a second
-    invocation of the same builder would silently reuse the first
-    invocation's cached blocks — cross-invocation result reuse the bench
-    and oracle contract forbids (see ckpt module docstring). The one
-    allowed form is behind an explicit caller opt-in flag
-    (pipeline_training_data_curation's persist_intermediate, default
-    False)."""
+    """persist()/cache() must never appear in a registry builder path:
+    CacheManager matches canonicalized plans, so a second invocation of
+    the same builder would silently reuse the first invocation's cached
+    blocks — cross-invocation result reuse the bench and oracle contract
+    forbids (see ckpt module docstring). No exception is allowed; shared
+    frames go through ckpt.checkpoint_shared."""
     from pathlib import Path
 
     qdir = Path(__file__).resolve().parents[1] / "glue_etl_framework_spark" / "queries"
     for path in sorted(qdir.glob("*.py")):
-        src = path.read_text()
-        for i, line in enumerate(src.splitlines(), 1):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
             code = line.split("#", 1)[0]
-            if ".persist(" in code or ".cache(" in code:
-                # must be guarded by the documented opt-in knob nearby
-                ctx = "\n".join(src.splitlines()[max(0, i - 6): i])
-                assert "persist_intermediate" in ctx, (
-                    f"{path.name}:{i} uses persist/cache outside the "
-                    "persist_intermediate opt-in — CacheManager plan "
-                    "matching would reuse results across invocations"
-                )
+            assert ".persist(" not in code and ".cache(" not in code, (
+                f"{path.name}:{i} uses persist/cache in a registry query "
+                "path — CacheManager plan matching would reuse results "
+                "across invocations"
+            )

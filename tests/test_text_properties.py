@@ -10,8 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from glue_etl_framework_spark.ext.dedup import shingle_tokens
-from glue_etl_framework_spark.queries.dedup import SHINGLE_REGEX
+from glue_etl_framework_spark.ext.dedup import shingle_array, shingle_tokens
 
 # Tokens drawn to stress the anchor: punctuation-leading, pure punctuation,
 # quotes/brackets, unicode, digits. Single-space separated (the split
@@ -42,7 +41,7 @@ def test_shingle_regex_matches_split_semantics(spark, texts):
     got = {
         (r.doc_id, r.s)
         for r in df.select(
-            "doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("s")
+            "doc_id", F.explode(shingle_array()).alias("s")
         ).collect()
     }
     want = {(i, sh) for i, s in enumerate(texts) for sh in _split_shingles(s)}
@@ -85,7 +84,7 @@ def test_shingle_regex_matches_duckdb_split_on_punctuation_corpus(spark, tmp_pat
     }
     got = {
         (r.doc_id, r.s)
-        for r in df.select("doc_id", F.explode(F.expr(SHINGLE_REGEX)).alias("s"))
+        for r in df.select("doc_id", F.explode(shingle_array()).alias("s"))
         .distinct()
         .collect()
     }
@@ -107,12 +106,10 @@ def test_ext_shingle_tokens_punctuation(spark):
 )
 @given(texts=st.lists(TEXT, min_size=1, max_size=6))
 def test_bigram_regex_matches_split_semantics(spark, texts):
-    """queries.llmops.BIGRAM_REGEX must produce exactly the split-on-space
+    """ext.dedup.shingle_array(n=2) must produce exactly the split-on-space
     consecutive pairs for ANY token content (multiset equality — repetition
     counting depends on duplicates, unlike the DISTINCT shingle path)."""
     from collections import Counter
-
-    from glue_etl_framework_spark.queries.llmops import BIGRAM_REGEX
 
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(texts)], "doc_id int, text string"
@@ -120,7 +117,7 @@ def test_bigram_regex_matches_split_semantics(spark, texts):
     got = Counter(
         (r.doc_id, r.s)
         for r in df.select(
-            "doc_id", F.explode(F.expr(BIGRAM_REGEX)).alias("s")
+            "doc_id", F.explode(shingle_array(n=2)).alias("s")
         ).collect()
     )
     want = Counter()
@@ -138,13 +135,11 @@ def test_bigram_regex_matches_split_semantics(spark, texts):
 )
 @given(texts=st.lists(TEXT, min_size=1, max_size=6))
 def test_trigram_regex_matches_split_semantics(spark, texts):
-    """queries.llmops.TRIGRAM_REGEX must produce exactly the split-on-space
+    """ext.dedup.shingle_array(n=3) must produce exactly the split-on-space
     consecutive triples for ANY token content (multiset equality), pinning
     the Spark regex side of dedup_ngram_contamination to the oracle's
     list-slice formulation."""
     from collections import Counter
-
-    from glue_etl_framework_spark.queries.llmops import TRIGRAM_REGEX
 
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(texts)], "doc_id int, text string"
@@ -152,7 +147,7 @@ def test_trigram_regex_matches_split_semantics(spark, texts):
     got = Counter(
         (r.doc_id, r.s)
         for r in df.select(
-            "doc_id", F.explode(F.expr(TRIGRAM_REGEX)).alias("s")
+            "doc_id", F.explode(shingle_array(n=3)).alias("s")
         ).collect()
     )
     want = Counter()

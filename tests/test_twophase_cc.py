@@ -127,10 +127,10 @@ def test_propagation_warns_when_round_budget_exhausted(spark):
 
 def test_propagation_exhaustion_default_falls_back_to_correct_labels(spark):
     """Strict-by-default (VERDICT r11 item 1): budget exhaustion on a
-    chain must NOT surface warned-but-wrong labels — the default
-    on_exhaustion='fallback' reruns via two-phase star contraction and the
-    returned labels are the true component minima despite max_iterations
-    being far below the chain's diameter."""
+    chain must NOT surface warned-but-wrong labels — exhaustion always
+    reruns via two-phase star contraction, and the returned labels are the
+    true component minima despite max_iterations being far below the
+    chain's diameter."""
     import warnings
 
     n = 24
@@ -140,45 +140,6 @@ def test_propagation_exhaustion_default_falls_back_to_correct_labels(spark):
         got = _run(spark, n, edges, connected_component_labels, max_iterations=3)
     assert any("falling back" in str(w.message) for w in caught)
     assert got == {i: 0 for i in range(n)}  # final labels, not 3-round truncation
-
-
-def test_propagation_exhaustion_raise_mode(spark):
-    import pytest
-
-    n = 16
-    edges = [(i, i + 1) for i in range(n - 1)]
-    with pytest.raises(RuntimeError, match="max_iterations"):
-        _run(
-            spark, n, edges, connected_component_labels,
-            max_iterations=2, on_exhaustion="raise",
-        )
-
-
-def test_propagation_exhaustion_warn_mode_is_opt_in_truncation(spark):
-    """on_exhaustion='warn' keeps the pre-r12 contract: non-final labels
-    come back (the far end of the chain still carries a label above the
-    true minimum 0) with only the warning — callers must opt in to that."""
-    import warnings
-
-    n = 24
-    edges = [(i, i + 1) for i in range(n - 1)]
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        got = _run(
-            spark, n, edges, connected_component_labels,
-            max_iterations=3, on_exhaustion="warn",
-        )
-    assert any("max_iterations" in str(w.message) for w in caught)
-    assert got[n - 1] > 0  # truncated: not yet the component minimum
-
-
-def test_propagation_rejects_unknown_on_exhaustion(spark):
-    import pytest
-
-    nodes = spark.createDataFrame([(1,)], ["doc_id"])
-    pairs = spark.createDataFrame([(1, 1)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="on_exhaustion"):
-        connected_component_labels(nodes, pairs, on_exhaustion="ignore")
 
 
 def test_twophase_exhaustion_warns_and_keeps_one_row_per_node(spark):
