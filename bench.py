@@ -28,6 +28,9 @@ from glue_etl_framework_spark.queries import load_registry
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_RUNS = int(os.environ.get("BENCH_RUNS", "5"))  # median of 5: box noise is ±15%
+# Longest final stdout line (newline included) that survives whole in a
+# 2000-char stdout tail capture, with a little margin.
+SUMMARY_LINE_BUDGET = 1990
 
 # Headline queries: one per major operator family, weighted toward the
 # shapes that dominate real pipelines (join+agg, window, dedup, similarity).
@@ -337,24 +340,29 @@ def final_summary_line(
     because the queries dict lived only in the longer detail line, whose
     FRONT the tail truncated mid-JSON. Fix (VERDICT r15 item 6): put the
     per-query dict IN the final line — as the driver contract always
-    specified — at 2-decimal precision with compact separators so the
-    whole line stays under the window even at worst-case digit widths
-    (tests/test_bench_guard.py pins the worst-case length < 1990).
+    specified — at 2-decimal precision with compact separators. When
+    4-digit per-query seconds would push the line (plus its newline) past
+    SUMMARY_LINE_BUDGET, the per-query values drop to 1 decimal, then to
+    whole seconds (tests/test_bench_guard.py pins the fit at 9999.99 s).
     Full 4-decimal detail still goes to BENCH_DETAIL.json and the earlier
     detail stdout line; timing methodology is unchanged."""
-    return json.dumps(
-        {
-            "metric": "headline_query_wall_seconds",
-            "value": round(sum(timings.values()), 4),
-            "unit": "sec",
-            "queries": {n: round(s, 2) for n, s in timings.items()},
-            "sf": sf_val,
-            "n_queries": len(timings),
-            "box_cal_sec": round(box_cal, 4),
-            "jvm_cal_sec": round(jvm_cal, 4),
-        },
-        separators=(",", ":"),
-    )
+    for ndigits in (2, 1, None):
+        line = json.dumps(
+            {
+                "metric": "headline_query_wall_seconds",
+                "value": round(sum(timings.values()), 4),
+                "unit": "sec",
+                "queries": {n: round(s, ndigits) for n, s in timings.items()},
+                "sf": sf_val,
+                "n_queries": len(timings),
+                "box_cal_sec": round(box_cal, 4),
+                "jvm_cal_sec": round(jvm_cal, 4),
+            },
+            separators=(",", ":"),
+        )
+        if len(line) + 1 < SUMMARY_LINE_BUDGET:
+            break
+    return line
 
 
 if __name__ == "__main__":

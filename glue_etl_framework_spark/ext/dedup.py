@@ -752,7 +752,7 @@ def _simhash_hamming_joined(sig: DataFrame, cand: DataFrame) -> DataFrame:
     validity rests on verifying with bit-identical semantics to the
     emitter it audits; sharing the construction removes the silent-
     divergence risk a copy carries (r15 review — same class as
-    queries.similarity._semdedup_band_members)."""
+    ext.similarity.quantized_cosine_joined)."""
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     hamming = F.aggregate(

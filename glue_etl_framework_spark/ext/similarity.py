@@ -1,49 +1,35 @@
-"""Approximate nearest-neighbor search over embedding columns at scale.
+"""Vector similarity over quantized embeddings: the one Spark home of
+exact cosine, brute-force top-k, IVF and banded random-hyperplane LSH.
 
-Two paths on top of the exact baseline in queries/similarity.py:
+Every builder works on the (vec_id, q, nq) frame from quantize_embeddings:
+each float dimension scaled by 2^20 and rounded to BIGINT, plus the exact
+integer squared norm. Dot products are then order-independent integer
+sums, so every cosine is a deterministic double on any partitioning and
+matches the DuckDB oracle SQL in queries/similarity.py bit for bit.
 
-1. Hyperplane-LSH bucketing (pure column expressions): deterministic random
-   hyperplanes derived from md5 bits; vectors sharing a signature bucket are
-   candidates. Works on array<float> directly, no ml Vector conversion,
-   whole plan stays in codegen.
-2. pyspark.ml BucketedRandomProjectionLSH (euclidean) for
-   approxNearestNeighbors / approxSimilarityJoin.
+- quantized_cosine / quantized_cosine_joined: the exact cosine column and
+  the candidate-pair verify join built on it.
+- brute_force_topk: broadcast queries x corpus scan, per-query top-k.
+- ivf_centroids / ivf_assign / ivf_probes / ivf_topk: inverted-file ANN
+  over a fixed-size md5 centroid sample.
+- hyperplane_signs / banded_signatures / band_join: one +-1 hyperplane
+  family, banded; ann_topk_lsh (queries against a corpus) and
+  lsh_neardup_pairs (near-duplicate pairs within one corpus) build on them.
 
-100 TB shape: both replace the corpus x corpus product with an equi-join on
-bucket id; recall is tuned by (n_planes, n_tables) and verified against the
-exact baseline in tests/.
+The registry entries in queries/ call these with fixed parameters and
+keep only their oracle SQL. At scale every path replaces the corpus x
+corpus product with a broadcast or an equi-join on a cell or band key.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-try:
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    HAS_ML = True
-except ImportError:  # pragma: no cover
-    HAS_ML = False
-
-
-def _hyperplane(dim: int, plane: int, table: int) -> list[float]:
-    """Deterministic pseudo-random unit-ish hyperplane: component sign/value
-    from md5 — reproducible everywhere, no RNG state."""
-    import hashlib
-
-    comps = []
-    for d in range(dim):
-        h = hashlib.md5(f"{table}:{plane}:{d}".encode()).digest()
-        # map first 4 bytes to [-1, 1)
-        v = int.from_bytes(h[:4], "big") / 2**31 - 1.0
-        comps.append(v)
-    norm = math.sqrt(sum(c * c for c in comps)) or 1.0
-    return [c / norm for c in comps]
+from glue_etl_framework_spark.ckpt import BOUNDED, DATA_SIZED, checkpoint_shared
 
 
 def assert_vector_dim(df: DataFrame, vec_col: str, dim: int) -> None:
@@ -70,369 +56,7 @@ def assert_vector_dim(df: DataFrame, vec_col: str, dim: int) -> None:
         )
 
 
-def float_array_sql(vals: list[float]) -> str:
-    """Spark-SQL text of an array<double> literal whose elements are
-    EXACTLY the given Python floats. ``repr(float)`` emits the shortest
-    decimal that round-trips to the same IEEE-754 double, and Spark's
-    decimal/scientific literal -> DOUBLE conversion is correctly rounded,
-    so ``CAST(<repr> AS DOUBLE)`` reconstructs the identical bits (pinned
-    value- and bit-exact by tests/test_r16_optimizations.py). Used by the
-    float-plane signature builder below — the r15 band_value_sql treatment
-    (one F.expr parse instead of dim x planes py4j F.lit round trips)
-    extended to non-integer components (VERDICT r15 item 5)."""
-    return "array(" + ",".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-
-
-def table_sig_sql(table: int, dim: int, n_planes: int, vec_col: str) -> str:
-    """Spark-SQL text of hyperplane table ``table``'s signature value over
-    a float-array column — semantically identical to the unrolled Column
-    build it replaced in hyperplane_signatures (same zip_with/aggregate/
-    CASE tree after parsing; the reference construction is kept in
-    tests/test_r16_optimizations.py and pinned value- and dtype-equal)."""
-    ident = vec_col.replace("`", "``")
-    bits = []
-    for p in range(n_planes):
-        arr = float_array_sql(_hyperplane(dim, p, table))
-        dot = (
-            f"aggregate(zip_with(`{ident}`, {arr}, "
-            f"(x, c) -> CAST(x AS DOUBLE) * c), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        bits.append(
-            f"(CASE WHEN {dot} > 0.0 THEN CAST({1 << p} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(bits)
-
-
-def hyperplane_signatures(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 12,
-    n_tables: int = 3,
-) -> DataFrame:
-    """Add ``sig_0..sig_{n_tables-1}`` integer bucket columns: bit p of
-    sig_t = sign(v . hyperplane(t, p)). Cosine-similar vectors collide with
-    probability (1 - theta/pi)^n_planes per table.
-
-    Contract: every vector must have exactly ``dim`` components — the
-    plan-pure construction cannot check this itself (r15 review: a
-    mismatch nulls the zip_with products and would silently zero every
-    signature); API entry points validate via assert_vector_dim.
-
-    r16 (guide §1.2 step 2, the band_value_sql treatment): each table's
-    signature parses as ONE SQL string. The previous unrolled build made
-    dim x n_planes x n_tables F.lit py4j round trips (64x12x3 ≈ 2.3k) per
-    call — ~0.9 s of driver-side plan construction; the SQL text builds in
-    ~1 ms and parses to the same expression tree, so execution is
-    untouched (float literals reconstruct bit-exactly, see
-    float_array_sql)."""
-    if not 1 <= n_planes <= 63:
-        raise ValueError(
-            "n_planes must be in [1, 63] (bit 63 would overflow LongType "
-            "— ADVICE r11, same bound as banded_signatures band_bits)"
-        )
-    out = df
-    for t in range(n_tables):
-        out = out.withColumn(
-            f"sig_{t}", F.expr(table_sig_sql(t, dim, n_planes, vec_col))
-        )
-    return out
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 10,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k neighbors: equi-join queries to corpus on any
-    matching LSH table signature, score exact cosine only on candidates,
-    keep best k per query. Returns (query_id, neighbor_id, cosine).
-    Validates vector length against ``dim`` up front (one cheap job per
-    side — r15 review: a mismatch would silently collapse every vector
-    into one bucket); norms are computed once per vector, not per
-    candidate pair, and candidate dedup keys on the id pair only."""
-    assert_vector_dim(corpus, vec_col, dim)
-    assert_vector_dim(queries, vec_col, dim)
-    csig = hyperplane_signatures(with_norm(corpus, vec_col), vec_col, dim, n_planes, n_tables)
-    qsig = hyperplane_signatures(with_norm(queries, vec_col), vec_col, dim, n_planes, n_tables)
-    c_long = _melt_sigs(csig, id_col, vec_col, n_tables).withColumnRenamed(id_col, "neighbor_id")
-    q_long = _melt_sigs(qsig, id_col, vec_col, n_tables).withColumnRenamed(id_col, "query_id")
-    cand = (
-        q_long.withColumnRenamed(vec_col, "qv").withColumnRenamed("sqnorm", "q_sqnorm")
-        .join(
-            c_long.withColumnRenamed(vec_col, "cv").withColumnRenamed("sqnorm", "n_sqnorm"),
-            ["table", "sig"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "q_sqnorm", "cv", "n_sqnorm")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = _cos(F.col("qv"), F.col("q_sqnorm"), F.col("cv"), F.col("n_sqnorm"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def _melt_sigs(df: DataFrame, id_col: str, vec_col: str, n_tables: int) -> DataFrame:
-    pairs = F.array(
-        *[
-            F.struct(F.lit(t).alias("table"), F.col(f"sig_{t}").alias("sig"))
-            for t in range(n_tables)
-        ]
-    )
-    carry = [c for c in (id_col, vec_col, "sqnorm") if c in df.columns]
-    return df.select(*carry, F.explode(pairs).alias("ts")).select(
-        *carry, F.col("ts.table").alias("table"), F.col("ts.sig").alias("sig")
-    )
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k (broadcast queries x corpus scan) — the recall
-    baseline; same shape as queries/similarity.py but reusable on any
-    DataFrame."""
-    q = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    c = with_norm(corpus.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        F.col("sqnorm").alias("n_sqnorm"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    cos = _cos(F.col("qv"), F.col("q_sqnorm"), F.col("cv"), F.col("n_sqnorm"))
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def brp_lsh_similarity_join(
-    df: DataFrame,
-    distance_threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Euclidean near-pairs via pyspark.ml BucketedRandomProjectionLSH
-    approxSimilarityJoin: (id_a, id_b, euclidean_distance)."""
-    if not HAS_ML:  # pragma: no cover
-        raise NotImplementedError("pyspark.ml not available")
-    vecs = df.select(id_col, array_to_vector(F.col(vec_col)).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes",
-        bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
-    )
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, distance_threshold, distCol="euclidean_distance")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            "euclidean_distance",
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------- IVF ----
-# Inverted-file ANN: the third scale path (coarse-quantize -> probe nearest
-# lists). queries/similarity.similarity_ann_ivf is the oracle-checked fixed
-# pipeline; these are the reusable library pieces.
-
-
-def _cos(qa, na, qb, nb):
-    dot = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Add ``sqnorm`` (squared L2 norm, double) for reuse across scoring."""
-    nq = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.withColumn("sqnorm", nq)
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 1,
-) -> DataFrame:
-    """Assign every corpus vector to its ``n_probe`` nearest centroids by
-    cosine (ties to the lowest centroid id). ``centroids`` must have
-    (cid, cvec) and be small enough to broadcast — the IVF contract (K ~
-    sqrt(corpus) even at 100 TB broadcasts fine). Returns (id, cid, rank).
-    One broadcast join + one window; no shuffle of the vectors beyond the
-    window's key partitioning."""
-    if n_probe < 1:
-        raise ValueError(
-            "n_probe must be >= 1 (r15 review: 0 silently assigned "
-            "nothing instead of raising like every sibling knob)"
-        )
-    c = with_norm(centroids.select("cid", F.col("cvec")), "cvec").withColumnRenamed(
-        "sqnorm", "c_sqnorm"
-    )
-    v = with_norm(corpus.select(id_col, vec_col), vec_col)
-    cos = _cos(F.col(vec_col), F.col("sqnorm"), F.col("cvec"), F.col("c_sqnorm"))
-    scored = v.join(F.broadcast(c), how="cross").select(id_col, "cid", cos.alias("cos"))
-    if n_probe == 1:
-        # Fast path for the bulk corpus assignment: max_by over (cos, -cid)
-        # partially aggregates map-side, so the shuffle carries one row per
-        # vector instead of all n x K scored rows (the window formulation
-        # shuffles + sorts everything). Same winner: cos desc, ties to
-        # lowest cid.
-        return (
-            scored.groupBy(id_col)
-            .agg(F.max_by("cid", F.struct(F.col("cos"), (-F.col("cid")).alias("nc"))).alias("cid"))
-            .select(id_col, "cid", F.lit(1).alias("rank"))
-        )
-    w = W.partitionBy(id_col).orderBy(F.col("cos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_probe)
-        .select(id_col, "cid", "rank")
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN search: corpus vectors live in their nearest-centroid list
-    (n_probe=1 assignment); each query scores only the lists of its
-    ``n_probe`` nearest centroids. Returns (query_id, neighbor_id, cosine)
-    with up to ``k`` rows per query (fewer when the probed lists hold
-    fewer than k other vectors). The probe-to-list candidate join is
-    BROADCAST (probes are n_probe rows per query); the non-broadcast
-    shuffles are ivf_assign's per-vector aggregate, the corpus-side join
-    keyed on neighbor_id, and the ranking window (r15 review — the old
-    text pointed capacity planning at the wrong join). Pairs scored
-    shrink by ~K/n_probe vs brute force."""
-    corpus_lists = ivf_assign(corpus, centroids, id_col, vec_col, n_probe=1).select(
-        F.col(id_col).alias("neighbor_id"), "cid"
-    )
-    probes = ivf_assign(queries, centroids, id_col, vec_col, n_probe=n_probe).select(
-        F.col(id_col).alias("query_id"), "cid"
-    )
-    qv = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    nv = with_norm(corpus.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        F.col("sqnorm").alias("n_sqnorm"),
-    )
-    cos = _cos(F.col("q_vec"), F.col("q_sqnorm"), F.col("n_vec"), F.col("n_sqnorm"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(probes)
-        .join(corpus_lists, "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-# ------------------------------------------- banded hyperplane LSH ----
-# Parameterized production path for embedding near-dup PAIR emitters
-# (VERDICT r10 item 1). The registry entry
-# queries/similarity.similarity_lsh_hyperplane_pairs pins the banding
-# constants (2 bands x 8 bits) because its DuckDB oracle must reproduce
-# them bit-for-bit; the r10 ninth scale probe showed what that costs at
-# volume: with a FIXED bucket count (2 x 256), bucket occupancy grows
-# linearly with the corpus, so in-bucket candidate pairs grow ~n^2
-# (measured: 10,183x output at 100x volume). These builders take the
-# banding shape as ARGUMENTS so production callers scale signature bits
-# with corpus size — buckets ~ n holds expected occupancy (and therefore
-# per-bucket pair volume) constant, keeping total candidates linear in n.
-# Sizing rule: band_bits = ceil(log2(n / target_rows_per_bucket)) — see
-# scaled_band_bits and RECIPES.md ("Scale LSH signature bits with the
-# corpus").
-
 QUANT_SCALE = 1 << 20  # matches queries/similarity.SCALE: exact BIGINT dots
-
-
-def hyperplane_signs(plane: int, dim: int = 64) -> list[int]:
-    """Deterministic pseudo-random +-1 hyperplane components: sign of the
-    top bit of md5("plane:i"), i 1-based — the identical construction the
-    oracle-pinned registry entry bakes into both its Spark plan and its
-    DuckDB SQL (queries/similarity.py), shared here so every banding shape
-    draws from one hyperplane family."""
-    import hashlib
-
-    return [
-        1 if hashlib.md5(f"{plane}:{i}".encode()).hexdigest()[0] >= "8" else -1
-        for i in range(1, dim + 1)
-    ]
-
-
-def band_value_sql(b: int, band_bits: int, dim: int, q_col: str = "q") -> str:
-    """Spark-SQL text of hyperplane band b's value over a quantized BIGINT
-    array column — semantically identical to the unrolled Column build
-    (same zip_with/aggregate/CASE tree after parsing), but ONE F.expr
-    parse instead of band_bits x dim py4j literal round-trips. r15
-    optimization: profiling showed the banded queries spent ~60% of their
-    wall in Python-side plan CONSTRUCTION (~0.7 s per 8x64 sign-array
-    batch of F.lit calls), not execution; the SQL-string form builds in
-    ~1 ms. Value parity with the old build is pinned by the unchanged
-    DuckDB oracles and tests/test_simhash_banding.py."""
-    # Backtick-escape the interpolated column name (ADVICE r15): every
-    # current caller passes a safe internal name, but a name containing a
-    # backtick would otherwise produce malformed/injected SQL.
-    q_ident = q_col.replace("`", "``")
-    bits = []
-    for k in range(band_bits):
-        signs = hyperplane_signs(b * band_bits + k, dim)
-        arr = "array(" + ",".join(str(s) for s in signs) + ")"
-        proj = (
-            f"aggregate(zip_with(`{q_ident}`, {arr}, (x, s) -> x * CAST(s AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << k} ELSE 0 END)")
-    return " + ".join(bits)
 
 
 def quantize_embeddings(
@@ -450,6 +74,228 @@ def quantize_embeddings(
         lambda acc, x: acc + x,
     )
     return out.select("vec_id", "q", nq.alias("nq"))
+
+
+def quantized_cosine(
+    qa: str = "qa", na: str = "na", qb: str = "qb", nb: str = "nb"
+) -> Column:
+    """Exact cosine of two quantized vectors held in columns: the integer
+    dot product of the BIGINT arrays ``qa``/``qb`` over the square roots
+    of their integer squared norms ``na``/``nb``."""
+    dot = F.aggregate(
+        F.zip_with(F.col(qa), F.col(qb), lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return dot / (F.sqrt(F.col(na).cast("double")) * F.sqrt(F.col(nb).cast("double")))
+
+
+def _side(v: DataFrame, id_col: str, suffix: str) -> DataFrame:
+    """One join side of a quantized frame: (id_col, q<suffix>, n<suffix>)."""
+    return v.select(
+        F.col("vec_id").alias(id_col),
+        F.col("q").alias(f"q{suffix}"),
+        F.col("nq").alias(f"n{suffix}"),
+    )
+
+
+def quantized_cosine_joined(
+    v: DataFrame, cand: DataFrame, a_col: str = "vec_a", b_col: str = "vec_b"
+) -> DataFrame:
+    """cand's columns plus ``cosine`` for candidate id pairs (a_col,
+    b_col) against a quantized (vec_id, q, nq) frame — the single
+    exact-cosine verify shared by every pair emitter and by its auditor
+    (ext.dedup.estimate_lost_hyperplane_pairs). The audit's validity
+    rests on verifying with bit-identical semantics to the emitter it
+    prices; sharing removes the silent-divergence risk a copy carries
+    (same class as ext.dedup._simhash_hamming_joined)."""
+    return (
+        cand.join(_side(v, a_col, "a"), a_col)
+        .join(_side(v, b_col, "b"), b_col)
+        .select(*cand.columns, quantized_cosine().alias("cosine"))
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine rounded to 9 places): the ``k``
+    best neighbors per query, ties to the lower neighbor id."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
+    )
+
+
+def _score(cand: DataFrame, corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for candidate (query_id,
+    neighbor_id) pairs; the (small) query side is broadcast."""
+    return (
+        cand.join(F.broadcast(_side(queries, "query_id", "a")), "query_id")
+        .join(_side(corpus, "neighbor_id", "b"), "neighbor_id")
+        .select("query_id", "neighbor_id", quantized_cosine().alias("cosine"))
+    )
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k of each query vector over the corpus, both
+    quantized (vec_id, q, nq) frames; a vector never neighbors itself.
+    The (small) query side is broadcast against one corpus scan with a
+    per-query top-k (row_number): no global sort, no corpus x corpus
+    product. Returns (query_id, neighbor_id, cosine) — the recall
+    baseline for the approximate paths below."""
+    pairs = (
+        F.broadcast(_side(queries, "query_id", "a"))
+        .join(_side(corpus, "neighbor_id", "b"), F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", quantized_cosine().alias("cosine"))
+    )
+    return _top_k(pairs, k)
+
+
+# ---------------------------------------------------------------- IVF ----
+# Inverted-file ANN: coarse-quantize the corpus into cells, then score each
+# query only against the vectors in its n_probe nearest cells.
+
+
+def ivf_centroids(v: DataFrame, n_centroids: int = 16) -> DataFrame:
+    """(cid, cq, cnq): the IVF coarse quantizer's centroids — a FIXED-size
+    deterministic sample of the quantized frame ``v`` (the bottom
+    ``n_centroids`` vec_ids by md5, a TakeOrdered, so selection is a
+    map-side top-K with no full shuffle and K does not grow with the
+    corpus). cid is the sampled vector's id. Checkpointed (BOUNDED: K
+    rows) so callers that broadcast it twice — cell assignment plus query
+    probes — build it once (r5 plan audit: 2x TakeOrderedAndProject
+    without this)."""
+    sample = (
+        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(n_centroids)
+        .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq"), F.col("nq").alias("cnq"))
+    )
+    return checkpoint_shared(sample, size_class=BOUNDED)
+
+
+def _cell_cosines(v: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cid, cos): exact cosine of every vector to every centroid
+    — an n x K broadcast cross join, map-side, linear in n."""
+    return v.join(F.broadcast(cent), how="cross").select(
+        "vec_id", "cid", quantized_cosine("q", "nq", "cq", "cnq").alias("cos")
+    )
+
+
+def ivf_assign(v: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cid): every vector's nearest centroid of ``cent`` (cid,
+    cq, cnq), ties to the lowest cid. max_by over (cos, -cid) partially
+    aggregates map-side, so one row per vector reaches the shuffle
+    instead of all n x K scored rows."""
+    return (
+        _cell_cosines(v, cent)
+        .groupBy("vec_id")
+        .agg(F.max_by("cid", F.struct(F.col("cos"), (-F.col("cid")).alias("nc"))).alias("cid"))
+    )
+
+
+def ivf_probes(queries: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """(query_id, cid): each query's ``n_probe`` nearest centroids, ties
+    to the lowest cid."""
+    if n_probe < 1:
+        raise ValueError(
+            "n_probe must be >= 1 (r15 review: 0 silently assigned "
+            "nothing instead of raising like every sibling knob)"
+        )
+    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cid"))
+    return (
+        _cell_cosines(queries, cent)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n_probe)
+        .select(F.col("vec_id").alias("query_id"), "cid")
+    )
+
+
+def ivf_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 4,
+    n_centroids: int = 16,
+) -> DataFrame:
+    """IVF approximate top-k over quantized (vec_id, q, nq) frames: corpus
+    vectors live in their nearest-centroid cell (ivf_assign); each query
+    scores only the cells of its ``n_probe`` nearest centroids, so pairs
+    scored shrink by ~n_centroids/n_probe vs brute force. Returns
+    (query_id, neighbor_id, cosine) with up to ``k`` rows per query
+    (fewer when the probed cells hold fewer than k other vectors). The
+    probe-to-cell candidate join and the query side of the cosine join
+    are broadcast; the non-broadcast shuffles are the per-vector
+    assignment aggregate, the corpus-side join keyed on neighbor_id, and
+    the ranking window."""
+    cent = ivf_centroids(corpus, n_centroids)
+    cand = (
+        F.broadcast(ivf_probes(queries, cent, n_probe))
+        .join(ivf_assign(corpus, cent), "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+    return _top_k(_score(cand, corpus, queries), k)
+
+
+# ------------------------------------------- banded hyperplane LSH ----
+# The registry entry queries/similarity.similarity_lsh_hyperplane_pairs
+# pins the banding constants (2 bands x 8 bits) because its DuckDB oracle
+# must reproduce them bit-for-bit; the r10 ninth scale probe showed what
+# that costs at volume: with a FIXED bucket count (2 x 256), bucket
+# occupancy grows linearly with the corpus, so in-bucket candidate pairs
+# grow ~n^2 (measured: 10,183x output at 100x volume). The builders below
+# take the banding shape as ARGUMENTS so production callers scale
+# signature bits with corpus size — buckets ~ n holds expected occupancy
+# (and therefore per-bucket pair volume) constant, keeping total
+# candidates linear in n. Sizing rule: band_bits =
+# ceil(log2(n / target_rows_per_bucket)) — see scaled_band_bits and
+# RECIPES.md ("Scale LSH signature bits with the corpus").
+
+
+def hyperplane_signs(plane: int, dim: int = 64) -> list[int]:
+    """Deterministic pseudo-random +-1 hyperplane components: sign of the
+    top bit of md5("plane:i"), i 1-based — the one hyperplane family,
+    baked into both the Spark plans and the DuckDB oracle SQL
+    (queries/similarity.py) as literals, so every banding shape and the
+    JL projection audit draw from it."""
+    import hashlib
+
+    return [
+        1 if hashlib.md5(f"{plane}:{i}".encode()).hexdigest()[0] >= "8" else -1
+        for i in range(1, dim + 1)
+    ]
+
+
+def hyperplane_projection_sql(plane: int, dim: int, q_col: str = "q") -> str:
+    """Spark-SQL text of the exact integer projection of a quantized
+    BIGINT array column onto hyperplane ``plane`` of hyperplane_signs."""
+    # Backtick-escape the interpolated column name (ADVICE r15): every
+    # current caller passes a safe internal name, but a name containing a
+    # backtick would otherwise produce malformed/injected SQL.
+    q_ident = q_col.replace("`", "``")
+    arr = "array(" + ",".join(str(s) for s in hyperplane_signs(plane, dim)) + ")"
+    return (
+        f"aggregate(zip_with(`{q_ident}`, {arr}, (x, s) -> x * CAST(s AS BIGINT)), "
+        f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+
+
+def band_value_sql(b: int, band_bits: int, dim: int, q_col: str = "q") -> str:
+    """Spark-SQL text of hyperplane band b's value over a quantized BIGINT
+    array column — semantically identical to the unrolled Column build
+    (same zip_with/aggregate/CASE tree after parsing), but ONE F.expr
+    parse instead of band_bits x dim py4j literal round-trips. r15
+    optimization: profiling showed the banded queries spent ~60% of their
+    wall in Python-side plan CONSTRUCTION (~0.7 s per 8x64 sign-array
+    batch of F.lit calls), not execution; the SQL-string form builds in
+    ~1 ms. Value parity with the old build is pinned by the unchanged
+    DuckDB oracles and tests/test_simhash_banding.py."""
+    bits = []
+    for k in range(band_bits):
+        proj = hyperplane_projection_sql(b * band_bits + k, dim, q_col)
+        bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << k} ELSE 0 END)")
+    return " + ".join(bits)
 
 
 def banded_signatures(
@@ -477,6 +323,35 @@ def banded_signatures(
     ]
     return qdf.select(
         "vec_id", F.posexplode(F.array(*band_cols)).alias("bidx", "bv")
+    )
+
+
+def band_join(
+    sig: DataFrame, other: DataFrame | None = None, keys: tuple[str, ...] = ("bidx", "bv")
+) -> DataFrame:
+    """(vec_a, vec_b) distinct pairs of vectors that share a band bucket
+    of a banded_signatures frame. With one frame this is the self-join,
+    canonicalized vec_a < vec_b; with ``other`` it is the cross-side join
+    (vec_a from sig, vec_b from other, no ordering) — e.g. a training set
+    against a held-out reference set, never set x set. ``keys`` may add
+    columns both frames carry (a coarse cell id) to the bucket key. The
+    join is keyed, so the shuffle is O(vectors x bands), never
+    O(vectors^2)."""
+    a = sig.select(F.col("vec_id").alias("vec_a"), *keys)
+    b = (sig if other is None else other).select(F.col("vec_id").alias("vec_b"), *keys)
+    pairs = a.join(b, list(keys))
+    if other is None:
+        pairs = pairs.filter(F.col("vec_a") < F.col("vec_b"))
+    return pairs.select("vec_a", "vec_b").distinct()
+
+
+def verified_pairs(v: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cosine rounded to 9 places) for the candidate pairs
+    whose exact quantized cosine is >= threshold."""
+    return (
+        quantized_cosine_joined(v, cand)
+        .filter(F.col("cosine") >= threshold)
+        .select("vec_a", "vec_b", F.round("cosine", 9).alias("cosine"))
     )
 
 
@@ -528,25 +403,33 @@ def auto_bucket_cap(n_rows: int, band_bits: int, factor: int = 8) -> int:
     return factor * math.ceil(n_rows / (1 << band_bits))
 
 
-def quantized_cosine_joined(
-    v: DataFrame, cand: DataFrame, a_col: str = "vec_a", b_col: str = "vec_b"
+def ann_topk_lsh(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    n_bands: int = 4,
+    band_bits: int = 10,
+    dim: int = 64,
 ) -> DataFrame:
-    """(a_col, b_col, cosine) for candidate id pairs against a quantized
-    (vec_id, q, nq) frame — the single exact-cosine verify construction
-    shared by the emitter (lsh_neardup_pairs) and its auditor
-    (ext.dedup.estimate_lost_hyperplane_pairs). The audit's validity
-    rests on verifying with bit-identical semantics to the emitter it
-    prices; sharing removes the silent-divergence risk a copy carries
-    (r15 review — same class as ext.dedup._simhash_hamming_joined)."""
-    x = v.select(F.col("vec_id").alias(a_col), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias(b_col), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x_: acc + x_,
+    """Approximate top-k over quantized (vec_id, q, nq) frames: queries
+    meet corpus vectors only through shared band buckets (band_join
+    cross-side, keyed on band index and value), exact cosine scores the
+    candidates, and the best k per query are kept. More bands raise
+    recall; more bits per band cut candidates. Scores are exact, so every
+    returned row agrees with brute_force_topk. Returns (query_id,
+    neighbor_id, cosine). Validates vector length against ``dim`` up
+    front (one cheap job per side: a mismatch would silently collapse
+    every vector into one bucket)."""
+    qsig = banded_signatures(queries, n_bands=n_bands, band_bits=band_bits, dim=dim)
+    csig = banded_signatures(corpus, n_bands=n_bands, band_bits=band_bits, dim=dim)
+    assert_vector_dim(corpus, "q", dim)
+    assert_vector_dim(queries, "q", dim)
+    cand = (
+        band_join(qsig, csig)
+        .filter(F.col("vec_a") != F.col("vec_b"))
+        .select(F.col("vec_a").alias("query_id"), F.col("vec_b").alias("neighbor_id"))
     )
-    cosine = dot / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
-    return cand.join(x, a_col).join(y, b_col).select(a_col, b_col, cosine.alias("cosine"))
+    return _top_k(_score(cand, corpus, queries), k)
 
 
 def lsh_neardup_pairs(
@@ -622,7 +505,7 @@ def lsh_neardup_pairs(
     # One quantization pass, three consumers (signatures + both verify-join
     # sides) — checkpoint so the lineage doesn't re-execute per consumer
     # (ADVICE r11; the simhash twin already did this).
-    v = quantize_embeddings(df, id_col, vec_col).localCheckpoint(eager=True)
+    v = checkpoint_shared(quantize_embeddings(df, id_col, vec_col), size_class=DATA_SIZED)
     # Aggregates the already-materialized checkpoint — near-free, and it
     # catches the silent all-in-one-bucket collapse a dim mismatch causes
     # (r15 review; see assert_vector_dim).
@@ -635,21 +518,10 @@ def lsh_neardup_pairs(
         # count + cold join) on top of the self-join's two sides —
         # materialize the projection once instead of re-running it 5x.
         sig = drop_hot_buckets(
-            sig.localCheckpoint(eager=True), max_bucket_size, ["bidx", "bv"],
+            checkpoint_shared(sig, size_class=DATA_SIZED), max_bucket_size, ["bidx", "bv"],
             metrics=cap_metrics,
         )
-    cand = (
-        sig.select(F.col("vec_id").alias("vec_a"), "bidx", "bv")
-        .join(sig.select(F.col("vec_id").alias("vec_b"), "bidx", "bv"), ["bidx", "bv"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    out = (
-        quantized_cosine_joined(v, cand)
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", F.round("cosine", 9).alias("cosine"))
-    )
+    out = verified_pairs(v, band_join(sig), threshold)
     if top_k_partners is not None:
         from glue_etl_framework_spark.ext.dedup import (
             keep_top_k_partners,

@@ -1569,7 +1569,8 @@ def similarity_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query side is the small one by construction; for query sets beyond
     broadcast size, band both sides with hyperplane LSH first
     (similarity_lsh_hyperplane_pairs is that scale path)."""
-    from glue_etl_framework_spark.queries.similarity import _dot, _quantized
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine
+    from glue_etl_framework_spark.queries.similarity import _quantized
 
     v = _quantized(spark, sf_dir)
     queries = v.filter(F.col("vec_id") % RADIUS_QMOD == 0).select(
@@ -1580,13 +1581,10 @@ def similarity_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"),
         F.col("nq").alias("nb"),
     )
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
     return (
         F.broadcast(queries)
         .join(corpus, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
+        .select("query_id", "neighbor_id", quantized_cosine().alias("cosine"))
         .filter(F.col("cosine") >= RADIUS)
         .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
     )
@@ -1657,15 +1655,12 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"),
         F.col("q").alias("qb"), F.col("nq").alias("nb"),
     )
-    from glue_etl_framework_spark.queries.similarity import _dot
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine
 
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
     pairs = (
         F.broadcast(queries)
         .join(corpus, F.col("nid") != F.col("qid"))
-        .select("qid", "nid", "nlabel", cosine.alias("cosine"))
+        .select("qid", "nid", "nlabel", quantized_cosine().alias("cosine"))
     )
     w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")
     knn = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= KNN_K)
@@ -1876,26 +1871,17 @@ def curation_crossmodal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     set; two hash equi-joins attach quantized vectors; cosine is an exact
     integer dot product. Nothing here is all-pairs — cost is the verified
     dedup plus two lookups."""
+    from glue_etl_framework_spark.ext.similarity import quantized_cosine_joined
     from glue_etl_framework_spark.queries.dedup import dedup_minhash_verified
-    from glue_etl_framework_spark.queries.similarity import _dot, _quantized
+    from glue_etl_framework_spark.queries.similarity import _quantized
 
     pairs = dedup_minhash_verified(spark, sf_dir)
     v = _quantized(spark, sf_dir)
-    a = v.select(F.col("vec_id").alias("doc_a"), F.col("q").alias("qa"),
-                 F.col("nq").alias("na"))
-    b = v.select(F.col("vec_id").alias("doc_b"), F.col("q").alias("qb"),
-                 F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    return (
-        pairs.join(a, "doc_a").join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round("jaccard", 6).alias("jaccard"),
-            F.round(cosine, 9).alias("cosine"),
-            F.when(cosine >= XMODAL_AGREE, 1).otherwise(0).alias("embeddings_agree"),
-        )
+    return quantized_cosine_joined(v, pairs, "doc_a", "doc_b").select(
+        "doc_a", "doc_b",
+        F.round("jaccard", 6).alias("jaccard"),
+        F.round("cosine", 9).alias("cosine"),
+        F.when(F.col("cosine") >= XMODAL_AGREE, 1).otherwise(0).alias("embeddings_agree"),
     )
 
 
@@ -4875,10 +4861,15 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise both K's; the plan shape is constant."""
     from pyspark.sql import Window as W
 
+    from glue_etl_framework_spark.ext.similarity import (
+        ivf_assign,
+        ivf_centroids,
+        ivf_probes,
+    )
     from glue_etl_framework_spark.queries.similarity import (
+        N_CENTROIDS,
         N_PROBE,
         _quantized,
-        coarse_cells,
     )
 
     sub, csub, assign_pq = _pq_frames(spark, sf_dir)
@@ -4889,14 +4880,9 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    _, scored, cassign = coarse_cells(v, "ccid")
-    rn_w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("ccid"))
-    probes = (
-        scored.filter(F.col("vec_id") < PQ_N_QUERIES)
-        .withColumn("rn", F.row_number().over(rn_w))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "ccid")
-    )
+    cent = ivf_centroids(v, N_CENTROIDS)
+    cassign = ivf_assign(v, cent)
+    probes = ivf_probes(v.filter(F.col("vec_id") < PQ_N_QUERIES), cent, N_PROBE)
     dist = F.aggregate(
         F.zip_with(F.col("sq"), F.col("cs"), lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"),
@@ -4910,7 +4896,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         F.broadcast(probes)
-        .join(cassign, "ccid")
+        .join(cassign, "cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )

@@ -7,18 +7,32 @@ products and squared norms are then exact integer sums (order-independent,
 < 2^53), and cosine = dot / (sqrt(nq_a) * sqrt(nq_b)) is a deterministic
 double. This removes float-summation-order nondeterminism entirely.
 
-Scale path: the LSH-bucketed ANN variant (random-hyperplane signatures via
-the portable md5-bit trick) is in glue_etl_framework_spark.ext.similarity
-together with pyspark.ml BucketedRandomProjectionLSH; its recall against
-this exact baseline is property-tested in tests/.
+The Spark side of every entry is a fixed-parameter call into
+glue_etl_framework_spark.ext.similarity (quantized cosine, brute-force
+top-k, IVF, banded hyperplane LSH); this module keeps the DuckDB oracle
+SQL those calls are checked against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from glue_etl_framework_spark.ckpt import BOUNDED, DATA_SIZED, checkpoint_shared
+from glue_etl_framework_spark.ext.similarity import (
+    band_join,
+    banded_signatures,
+    brute_force_topk,
+    hyperplane_projection_sql,
+    hyperplane_signs,
+    ivf_assign,
+    ivf_centroids,
+    ivf_topk,
+    quantize_embeddings,
+    quantized_cosine,
+    quantized_cosine_joined,
+    verified_pairs,
+)
 from glue_etl_framework_spark.queries import register, t
 from glue_etl_framework_spark.queries.dedup import SHINGLE_DF_CAP
 
@@ -46,55 +60,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping SCALE == QUANT_SCALE in sync; the oracle SQL pins 2^20, so a
     drift in either copy would break the bit-for-bit contract silently).
     PLANS.md regen confirmed the delegation is plan-identical."""
-    from glue_etl_framework_spark.ext.similarity import quantize_embeddings
-
     return quantize_embeddings(t(spark, sf_dir, "embeddings"))
-
-
-def _dot(qa, qb):
-    return F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def coarse_cells(v: DataFrame, cell_col: str = "cid"):
-    """Shared IVF coarse quantizer used by similarity_ann_ivf,
-    dedup_semdedup, and llmops.similarity_ivf_pq_topk: FIXED-size
-    deterministic centroid sample (bottom-N_CENTROIDS vec_ids by md5 — a
-    TakeOrdered, O(K) broadcast at any corpus size), exact quantized
-    cosine scoring (n x K, map-side), and nearest-cell assignment via
-    max_by over (cos, -cell) — one row per vector reaches the shuffle,
-    ties to the lowest cell id, matching _kmeans_assign_sql exactly.
-    Returns (cent, scored, assign); ``scored`` is exposed for callers
-    that also need per-query probe lists (row_number over it)."""
-    # the centroid sample is a full-corpus TakeOrdered; pin it with
-    # localCheckpoint so multi-consumer callers (ivf_pq_topk probes +
-    # cell assignment) build it once instead of once per broadcast
-    # (r5 plan audit: 2x TakeOrderedAndProject without this)
-    cent = F.broadcast(
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias(cell_col),
-            F.col("q").alias("cq"),
-            F.col("nq").alias("cnq"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cos_to_cent = _dot(F.col("q"), F.col("cq")) / (
-        F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("cnq").cast("double"))
-    )
-    scored = v.join(cent, how="cross").select(
-        "vec_id", cell_col, cos_to_cent.alias("cos")
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.max_by(
-            cell_col, F.struct(F.col("cos"), (-F.col(cell_col)).alias("nc"))
-        ).alias(cell_col)
-    )
-    return cent, scored, assign
 
 
 @register(
@@ -123,30 +89,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scan with a per-query top-k (row_number), no global sort and no
     corpus x corpus blowup."""
     v = _quantized(spark, sf_dir)
-    queries = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
-    )
-    corpus = v.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb")
-    )
-    pairs = (
-        F.broadcast(queries)
-        .join(corpus, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qa"), F.col("qb"))
-                / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
-    )
+    return brute_force_topk(v, v.filter(F.col("vec_id") < N_QUERIES), k=TOP_K)
 
 
 @register(
@@ -176,9 +119,7 @@ def similarity_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = v.join(lab, "vec_id")
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"), "label")
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"), "label")
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    cosine = quantized_cosine()
     return (
         a.join(b, "label")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -260,36 +201,13 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-exchange scan+transform subtree — one DATA_SIZED checkpoint = one
     quantization pass (the dedup_semdedup / similarity_ivf_pq_topk
     pattern, 0.84x-0.91x on their 10x ladders)."""
-    from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    rn_w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cid"))
-    _, scored, assign = coarse_cells(v, "cid")
-    probes = (
-        scored.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(rn_w))
-        .filter(F.col("rn") <= N_PROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    qv = v.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    topk_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rn", F.row_number().over(topk_w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cosine", 9).alias("cosine"))
+    return ivf_topk(
+        v,
+        v.filter(F.col("vec_id") < N_QUERIES),
+        k=TOP_K,
+        n_probe=N_PROBE,
+        n_centroids=N_CENTROIDS,
     )
 
 
@@ -303,17 +221,6 @@ _BAND_BITS = 8
 # probe; RECIPES.md "Scale LSH signature bits with the corpus").
 
 
-def _hyperplane_signs(j: int, dim: int = 64) -> list[int]:
-    """Deterministic pseudo-random +-1 hyperplane components: sign of the
-    top bit of md5("j:i") — reproducible in any engine/language, baked into
-    both the Spark plan and the oracle SQL as literals. Shared with the
-    parameterized ext builders (one hyperplane family for every banding
-    shape)."""
-    from glue_etl_framework_spark.ext.similarity import hyperplane_signs
-
-    return hyperplane_signs(j, dim)
-
-
 def _band_exprs_sql() -> list[str]:
     """SQL expressions for the two 8-bit band values of the hyperplane
     signature of q (quantized embedding array)."""
@@ -322,7 +229,7 @@ def _band_exprs_sql() -> list[str]:
         bits = []
         for k in range(_BAND_BITS):
             j = b * _BAND_BITS + k
-            signs = _hyperplane_signs(j)
+            signs = hyperplane_signs(j)
             arr = "list_value(" + ", ".join(str(s) for s in signs) + ")"
             proj = f"list_sum(list_transform(range(1, 65), i -> {arr}[i] * q[i]))"
             bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << k} ELSE 0 END)")
@@ -335,8 +242,6 @@ def _hyperplane_sig(v: DataFrame) -> DataFrame:
     signature, one row per vector per band — the LSH index frame shared by
     the pairs join and the multi-probe query path. Thin pin over the
     parameterized ext builder at the oracle's banding shape."""
-    from glue_etl_framework_spark.ext.similarity import banded_signatures
-
     return banded_signatures(
         v, n_bands=N_HYPERPLANES // _BAND_BITS, band_bits=_BAND_BITS
     )
@@ -383,34 +288,8 @@ def similarity_lsh_hyperplane_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     nothing for AQE to reuse, so the scan and per-element quantization ran
     three times. One DATA_SIZED checkpoint = one pass (the pattern
     ext.similarity.lsh_neardup_pairs already used; ADVICE r11)."""
-    from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    # One (band_idx, band_value) row per vector per band, then ONE self-join
-    # keyed on both — the same banded shape as MinHash LSH. The per-band
-    # union-of-self-joins formulation re-derives the signature lineage
-    # (quantize + 16 hyperplane projections) once per band per side; this
-    # computes it once and shuffles only (vec_id, bidx, bv) triples.
-    sig = _hyperplane_sig(v)
-    a_side = sig.select(F.col("vec_id").alias("vec_a"), "bidx", "bv")
-    b_side = sig.select(F.col("vec_id").alias("vec_b"), "bidx", "bv")
-    cand = (
-        a_side.join(b_side, ["bidx", "bv"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    x = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    return (
-        cand.join(x, "vec_a")
-        .join(y, "vec_b")
-        .filter(cosine >= 0.35)
-        .select("vec_a", "vec_b", F.round(cosine, 9).alias("cosine"))
-    )
+    return verified_pairs(v, band_join(_hyperplane_sig(v)), 0.35)
 
 
 @register(
@@ -502,26 +381,7 @@ def similarity_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations = loop the same two shuffles with localCheckpoint lineage
     truncation (see ext.dedup.dedup_keep_representative for the pattern)."""
     v = _quantized(spark, sf_dir)
-
-    def assign(centroids: DataFrame) -> DataFrame:
-        cos = _dot(F.col("q"), F.col("cq")) / (
-            F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("cnq").cast("double"))
-        )
-        # max_by over (cos, -cid): partial+final hash aggregate, one row per
-        # vector at the shuffle (vs sorting all n x K rows under a window).
-        return (
-            v.join(F.broadcast(centroids), how="cross")
-            .select("vec_id", "cid", cos.alias("cos"))
-            .groupBy("vec_id")
-            .agg(F.max_by("cid", F.struct(F.col("cos"), (-F.col("cid")).alias("nc"))).alias("cid"))
-        )
-
-    c0 = (
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(N_CENTROIDS)
-        .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq"), F.col("nq").alias("cnq"))
-    )
-    a1 = assign(c0)
+    a1 = ivf_assign(v, ivf_centroids(v, N_CENTROIDS))
     ex = a1.join(v, "vec_id").select(
         "cid", F.posexplode("q").alias("pos0", "val")
     )
@@ -548,7 +408,7 @@ def similarity_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("cq", lambda x: x * x), F.lit(0).cast("long"), lambda a, x: a + x
         ).alias("cnq"),
     )
-    a2 = assign(c1)
+    a2 = ivf_assign(v, c1)
     return (
         a2.join(v, "vec_id")
         .groupBy("cid")
@@ -619,31 +479,13 @@ def similarity_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataF
     sides, the clean-doc base) over a no-exchange scan+transform subtree —
     one DATA_SIZED checkpoint = one quantization pass (flagged in
     OPTIMIZATION_r15 "Not yet optimized")."""
-    from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    # One SQL-string parse per band (r15 — see ext.similarity.band_value_sql)
-    from glue_etl_framework_spark.ext.similarity import band_value_sql
-
-    band_cols = [
-        F.expr(band_value_sql(b, _BAND_BITS, 64, "q")).alias(f"band{b}")
-        for b in range(N_HYPERPLANES // _BAND_BITS)
-    ]
-    sig = v.select("vec_id", F.posexplode(F.array(*band_cols)).alias("bidx", "bv"))
+    sig = _hyperplane_sig(v)
     is_ref = F.col("vec_id") % REF_CORPUS_MOD == 0
-    bench = sig.filter(is_ref).select(F.col("vec_id").alias("ref_id"), "bidx", "bv")
-    cand = sig.filter(~is_ref)
-    hits = cand.join(bench, ["bidx", "bv"]).select("vec_id", "ref_id").distinct()
-    x = v.select("vec_id", F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("ref_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
+    hits = band_join(sig.filter(~is_ref), sig.filter(is_ref))
     agg = (
-        hits.join(x, "vec_id")
-        .join(y, "ref_id")
-        .select("vec_id", cosine.alias("cosine"))
-        .groupBy("vec_id")
+        quantized_cosine_joined(v, hits)
+        .groupBy(F.col("vec_a").alias("vec_id"))
         .agg(
             F.count(F.when(F.col("cosine") >= 0.35, 1)).alias("n_matches"),
             F.max(F.when(F.col("cosine") >= 0.35, F.col("cosine"))).alias("best"),
@@ -779,26 +621,6 @@ def similarity_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame
 SEMDEDUP_TAU = 0.35  # within-cluster cosine above which the higher id drops
 
 
-def _semdedup_band_members(v: DataFrame, assign: DataFrame) -> DataFrame:
-    """(vec_id, cid, bidx, bv) band membership for SemDeDup's candidate
-    join: the inline hyperplane banding (N_HYPERPLANES sign bits in
-    _BAND_BITS-wide bands) crossed with the coarse cell assignment —
-    the SAME bucketing the (cell, band) cap acts on, so an occupancy
-    probe should call this rather than copy it. Band values build as one
-    SQL-string parse per band (r15
-    optimization — see ext.similarity.band_value_sql: the unrolled
-    F.lit construction dominated the builder's wall in py4j calls)."""
-    from glue_etl_framework_spark.ext.similarity import band_value_sql
-
-    band_cols = [
-        F.expr(band_value_sql(b, _BAND_BITS, 64, "q")).alias(f"band{b}")
-        for b in range(N_HYPERPLANES // _BAND_BITS)
-    ]
-    sig = v.select("vec_id", *band_cols)
-    return assign.join(sig, "vec_id").select(
-        "vec_id", "cid", F.posexplode(F.array("band0", "band1")).alias("bidx", "bv")
-    )
-
 @register(
     "dedup_semdedup",
     oracle=f"""
@@ -898,11 +720,11 @@ def dedup_semdedup(
     # assignment, band members, both verify sides) over a no-exchange
     # scan+transform subtree — one DATA_SIZED checkpoint = one
     # quantization pass (see similarity_lsh_hyperplane_pairs).
-    from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
-
     v = checkpoint_shared(_quantized(spark, sf_dir), size_class=DATA_SIZED)
-    _, _, assign = coarse_cells(v, "cid")
-    mem = _semdedup_band_members(v, assign)
+    assign = ivf_assign(v, ivf_centroids(v, N_CENTROIDS))
+    # (vec_id, cid, bidx, bv): band buckets within each coarse cell — the
+    # buckets the (cell, band) cap acts on.
+    mem = assign.join(_hyperplane_sig(v), "vec_id")
     if metrics is not None:
         metrics["input_vectors"] = assign.count()
     if max_bucket_size is not None:
@@ -911,23 +733,8 @@ def dedup_semdedup(
         mem = drop_hot_buckets(
             mem, max_bucket_size, ["cid", "bidx", "bv"], metrics=metrics
         )
-    a_side = mem.select(F.col("vec_id").alias("vec_a"), "cid", "bidx", "bv")
-    b_side = mem.select(F.col("vec_id").alias("vec_b"), "cid", "bidx", "bv")
-    cand = (
-        a_side.join(b_side, ["cid", "bidx", "bv"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    x = v.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nq").alias("na"))
-    y = v.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
     dropped = (
-        cand.join(x, "vec_a")
-        .join(y, "vec_b")
-        .filter(cosine >= SEMDEDUP_TAU)
+        verified_pairs(v, band_join(mem, keys=("cid", "bidx", "bv")), SEMDEDUP_TAU)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(1))
@@ -935,7 +742,7 @@ def dedup_semdedup(
     if metrics is not None:
         # Materialize once: the metrics count and the result plan both
         # read the dropped set (same move as the curation composite).
-        dropped = dropped.localCheckpoint(eager=True)
+        dropped = checkpoint_shared(dropped, size_class=DATA_SIZED)
         metrics["neardup_removed"] = dropped.count()
         metrics["output_vectors"] = (
             metrics["input_vectors"] - metrics["neardup_removed"]
@@ -1221,10 +1028,9 @@ def curation_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         # audit measured 15 TakeOrderedAndProject / 19 corpus scans in
         # ONE plan). After: one mind pass + one lookup pass per round at
         # build time, and the final plan unions K one-row RDDs.
-        nxt = (
-            mind.orderBy(F.col("mind").desc(), F.col("vec_id").asc())
-            .limit(1)
-            .localCheckpoint(eager=True)
+        nxt = checkpoint_shared(
+            mind.orderBy(F.col("mind").desc(), F.col("vec_id").asc()).limit(1),
+            size_class=BOUNDED,
         )
         sel.append(
             nxt.select(
@@ -1233,11 +1039,14 @@ def curation_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("mind").alias("dist_fp"),
             )
         )
-        centers = centers.unionByName(
-            nxt.join(pts, "vec_id").select(
-                F.col("vec_id").alias("cid"), F.col("q").alias("cq")
-            )
-        ).localCheckpoint(eager=True)
+        centers = checkpoint_shared(
+            centers.unionByName(
+                nxt.join(pts, "vec_id").select(
+                    F.col("vec_id").alias("cid"), F.col("q").alias("cq")
+                )
+            ),
+            size_class=BOUNDED,
+        )
     out = sel[0]
     for s in sel[1:]:
         out = out.unionByName(s)
@@ -1346,21 +1155,7 @@ def similarity_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFr
         F.sum("via_exact").alias("n_cand_plain"),
         F.count("*").alias("n_cand_multi"),
     )
-    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nq").alias("na")
-    )
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nq").alias("nb"))
-    cosine = _dot(F.col("qa"), F.col("qb")) / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    truth_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    truth = (
-        F.broadcast(qv)
-        .join(nv, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rn", F.row_number().over(truth_w))
-        .filter(F.col("rn") <= TOP_K)
-    )
+    truth = brute_force_topk(v, v.filter(F.col("vec_id") < N_QUERIES), k=TOP_K)
     hits = (
         truth.join(cand, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -1377,7 +1172,7 @@ JL_SCALE = 1_000_000
 
 
 def _jl_proj_sql(vec: str, j: int) -> str:
-    signs = _hyperplane_signs(100 + j)  # disjoint seed range from the LSH bands
+    signs = hyperplane_signs(100 + j)  # disjoint seed range from the LSH bands
     arr = "list_value(" + ", ".join(str(s) for s in signs) + ")"
     return f"CAST(list_sum(list_transform(range(1, 65), i -> {arr}[i] * {vec}[i])) AS BIGINT)"
 
@@ -1437,11 +1232,7 @@ def similarity_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFram
     # invocation) purely to CONSTRUCT the plan; the parsed tree is
     # shape-identical, so execution and values are unchanged.
     def proj_sql(col, j):
-        arr = "array(" + ",".join(str(s) for s in _hyperplane_signs(100 + j)) + ")"
-        return (
-            f"aggregate(zip_with(`{col}`, {arr}, (x, s) -> x * CAST(s AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
+        return hyperplane_projection_sql(100 + j, 64, col)
 
     d_full = F.aggregate(
         F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: (x - y) * (x - y)),

@@ -651,8 +651,8 @@ def test_refreeze_window_sorts_rounds_numerically():
 def test_final_summary_line_carries_queries_and_fits_tail_window():
     from bench import HEADLINE, final_summary_line
 
-    # worst case: every query at 2-digit seconds, calibrations likewise
-    worst = dict.fromkeys(HEADLINE, 99.99)
+    # worst case: every query at 4-digit seconds, calibrations likewise
+    worst = dict.fromkeys(HEADLINE, 9999.99)
     line = final_summary_line(worst, 0.1, 99.9999, 99.9999)
     assert len(line) + 1 < 1990, (
         f"final bench line is {len(line)} chars at worst-case widths — the "

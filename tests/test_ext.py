@@ -24,6 +24,11 @@ def embeddings(spark):
     return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
 
 
+@pytest.fixture(scope="module")
+def quantized(embeddings):
+    return S.quantize_embeddings(embeddings)
+
+
 # ------------------------------------------------------------------ dedup --
 
 def test_minhash_finds_planted_duplicates(spark, docs):
@@ -108,70 +113,69 @@ def test_connected_components_accept_emitter_pair_columns(spark):
 
 # ------------------------------------------------------------- similarity --
 
-def test_lsh_input_guards(spark, embeddings):
+def test_lsh_input_guards(spark, embeddings, quantized):
     """r15 review guards: (a) a dim mismatch must raise a clear error
     instead of silently zeroing every signature (one bucket, O(n^2)
     candidates with bit-correct results); (b) a bad cap must fail at
     entry, before the eager full-corpus checkpoints; (c) out-of-range
     knobs raise like their siblings."""
-    import pytest as _pytest
-
-    from glue_etl_framework_spark.ext import similarity as S
-
     short = embeddings.select(
         "vec_id", F.slice("embedding", 1, 32).alias("embedding")
     )
-    with _pytest.raises(ValueError, match="dim=64"):
-        S.ann_topk_lsh(short, short.limit(2))
-    with _pytest.raises(ValueError, match="dim=64"):
+    short_q = S.quantize_embeddings(short)
+    with pytest.raises(ValueError, match="dim=64"):
+        S.ann_topk_lsh(short_q, short_q.limit(2))
+    with pytest.raises(ValueError, match="dim=64"):
         S.lsh_neardup_pairs(short, band_bits=8)
     for bad in ("Auto", "32", 0, -1, True):
-        with _pytest.raises(ValueError, match="max_bucket_size"):
+        with pytest.raises(ValueError, match="max_bucket_size"):
             S.lsh_neardup_pairs(embeddings, band_bits=8, max_bucket_size=bad)
-        with _pytest.raises(ValueError, match="max_bucket_size"):
+        with pytest.raises(ValueError, match="max_bucket_size"):
             D.simhash_neardup_pairs(
                 spark.createDataFrame([(1, "a b c")], ["doc_id", "text"]),
                 max_bucket_size=bad,
             )
-    with _pytest.raises(ValueError, match="n_probe"):
-        S.ivf_assign(embeddings, embeddings.limit(1).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-        ), n_probe=0)
-    with _pytest.raises(ValueError, match="n_planes"):
-        S.hyperplane_signatures(embeddings, n_planes=64)
+    with pytest.raises(ValueError, match="n_probe"):
+        S.ivf_topk(quantized, quantized.limit(1), n_probe=0)
+    with pytest.raises(ValueError, match="band_bits"):
+        S.ann_topk_lsh(quantized, quantized.limit(2), band_bits=64)
 
 
-def test_ann_lsh_recall_vs_bruteforce(spark, embeddings):
-    corpus = embeddings
-    queries = embeddings.filter(F.col("vec_id") < 15)
-    exact = S.brute_force_topk(corpus, queries, k=5)
-    # few planes + many tables: the fixture embeddings are weakly clustered
-    # (top-5 neighbor cosine ~0.3-0.5), so per-plane collision ~0.6 needs
-    # short signatures for usable recall
-    approx = S.ann_topk_lsh(corpus, queries, k=5, n_planes=4, n_tables=8)
+def test_ann_lsh_recall_vs_bruteforce(spark, quantized):
+    queries = quantized.filter(F.col("vec_id") < 15)
+    exact = S.brute_force_topk(quantized, queries, k=5)
+    # few bits per band + many bands: the fixture embeddings are weakly
+    # clustered (top-5 neighbor cosine ~0.3-0.5), so per-plane collision
+    # ~0.6 needs short bands for usable recall
+    approx = S.ann_topk_lsh(quantized, queries, k=5, n_bands=8, band_bits=4)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.5, f"ANN recall vs exact top-5: {recall}"
 
 
-def test_ann_candidates_subset_semantics(spark, embeddings):
+def test_ann_candidates_subset_semantics(spark, quantized):
     # every ANN result's cosine must equal the exact cosine (scores are
     # exact; only the candidate set is approximate)
-    queries = embeddings.filter(F.col("vec_id") < 5)
-    approx = S.ann_topk_lsh(embeddings, queries, k=3, n_planes=8, n_tables=3)
-    exact = S.brute_force_topk(embeddings, queries, k=embeddings.count())
+    queries = quantized.filter(F.col("vec_id") < 5)
+    approx = S.ann_topk_lsh(quantized, queries, k=3, n_bands=3, band_bits=8)
+    exact = S.brute_force_topk(quantized, queries, k=quantized.count())
     ex = {(r.query_id, r.neighbor_id): r.cosine for r in exact.collect()}
-    for r in approx.collect():
+    rows = approx.collect()
+    assert rows
+    for r in rows:
         assert abs(ex[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
 
 
 def test_brp_lsh_similarity_join(spark, embeddings):
+    """Planted identical vectors are found by the banded-hyperplane pair
+    emitter (the pyspark.ml BucketedRandomProjectionLSH path this test
+    once covered is gone; identical vectors share every band)."""
     small = embeddings.limit(100)
     planted = small.withColumn("vec_id", F.col("vec_id") + 10_000)
     corpus = small.unionByName(planted)
-    pairs = S.brp_lsh_similarity_join(corpus, distance_threshold=0.01)
-    found = {(r.id_a, r.id_b) for r in pairs.collect()}
+    pairs = S.lsh_neardup_pairs(corpus, threshold=0.99, band_bits=8)
+    found = {(r.vec_a, r.vec_b) for r in pairs.collect()}
     expected = {(r.vec_id, r.vec_id + 10_000) for r in small.collect()}
     recall = len(found & expected) / len(expected)
     assert recall >= 0.9, f"identical-vector recall {recall}"
@@ -250,16 +254,11 @@ def test_frame_sampling(spark, docs):
     assert all(i % 2 == 0 for i in idx)
 
 
-def test_ivf_topk_recall_vs_bruteforce(spark, embeddings):
-    from glue_etl_framework_spark.ext.similarity import brute_force_topk, ivf_topk
-
-    centroids = (
-        embeddings.filter(F.col("vec_id") % 25 == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    queries = embeddings.filter(F.col("vec_id") < 8)
-    approx = ivf_topk(queries, embeddings, centroids, k=5, n_probe=3)
-    exact = brute_force_topk(embeddings, queries, k=5)
+def test_ivf_topk_recall_vs_bruteforce(spark, quantized):
+    queries = quantized.filter(F.col("vec_id") < 8)
+    # default shape = the registry's (16 md5-sampled centroids, 4 probes)
+    approx = S.ivf_topk(quantized, queries, k=5)
+    exact = S.brute_force_topk(quantized, queries, k=5)
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     assert len(a) == 8 * 5
@@ -267,16 +266,10 @@ def test_ivf_topk_recall_vs_bruteforce(spark, embeddings):
     assert recall >= 0.4, f"IVF recall too low: {recall}"
 
 
-def test_ivf_assign_partitions_whole_corpus(spark, embeddings):
-    from glue_etl_framework_spark.ext.similarity import ivf_assign
-
-    centroids = (
-        embeddings.filter(F.col("vec_id") % 50 == 0)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    assign = ivf_assign(embeddings, centroids, n_probe=1)
-    assert assign.count() == embeddings.count()
-    assert assign.select("vec_id").distinct().count() == embeddings.count()
+def test_ivf_assign_partitions_whole_corpus(spark, quantized):
+    assign = S.ivf_assign(quantized, S.ivf_centroids(quantized, 10))
+    assert assign.count() == quantized.count()
+    assert assign.select("vec_id").distinct().count() == quantized.count()
 
 
 def test_pack_sequences_bin_budget_invariant(spark):
