@@ -1,15 +1,19 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints TWO
-JSON lines: first {"detail_queries": {name: sec}, "sf": ...} (also written
-to BENCH_DETAIL.json), then the FINAL compact summary line
-{"metric": ..., "value": total_sec, "unit": "sec", "sf": ...} — kept short
-because the driver's tail capture is ~2000 chars (r5's combined line
-overflowed it and recorded parsed:null).
+"""Query-timing runner: times registry queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 fixtures, SF_DIR) on local[$SPARK_GRAFT_CPUS] and prints ONE
+compact JSON line, {"metric", "value": total_sec, "unit", "queries",
+"sf", "n_queries"}, kept under SUMMARY_LINE_BUDGET because the driver's
+tail capture is ~2000 chars (r5's combined line overflowed it and
+recorded parsed:null).
+
+Usage:
+    python bench.py [name ...]      # default: the HEADLINE queries
 
 Each query is fully materialized through the noop sink (measures scan +
-compute + shuffle, not driver collection). Median of N_RUNS warm runs per
-query; one untimed warm-up first (JVM/codegen warmup).
+compute + shuffle, not driver collection). Median of $BENCH_RUNS (default
+5) warm runs per query; one untimed warm-up first (JVM/codegen warmup).
+Whether a change made a query slower is decided by tools_opt_abx.py,
+which times both trees with this module's ``time_query``.
 """
 
 from __future__ import annotations
@@ -19,12 +23,6 @@ import os
 import statistics
 import sys
 import time
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent))
-
-from glue_etl_framework_spark import get_spark
-from glue_etl_framework_spark.queries import load_registry
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_RUNS = int(os.environ.get("BENCH_RUNS", "5"))  # median of 5: box noise is ±15%
@@ -107,245 +105,55 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def box_calibration_sec() -> float:
-    """Fixed pure-Python workload timed single-threaded: a deterministic
-    JPEG encode+decode through the repo's own codec. Recorded alongside
-    every bench so rounds are comparable across VM placements — the r6
-    sessions measured the SAME commit at 0.91x/1.28x/1.21x of anchor
-    purely from host speed, with Python-kernel queries drifting ~2x.
-    Ratio of two rounds' calibration ~= ratio of their Python-kernel
-    floor; it is NOT folded into the timings (raw seconds stay raw)."""
-    from glue_etl_framework_spark.ext.jpeg_py import decode_jpeg, encode_jpeg
-
-    px = bytes((x * 7 + y * 13 + c * 29) % 256 for y in range(48) for x in range(48) for c in range(3))
-    t0 = time.perf_counter()
-    for _ in range(8):
-        decode_jpeg(encode_jpeg(48, 48, px, quality=85, subsample="420"))
-    return round(time.perf_counter() - t0, 4)
-
-
-def jvm_calibration_sec(spark) -> float:
-    """Fixed JVM-side workload timed on the live SparkSession: a canonical
-    10M-row range -> modulo keys -> groupBy sum through the noop sink
-    (codegen + hash agg + one shuffle + scheduler, zero disk I/O). The
-    pure-Python ``box_calibration_sec`` kernel tracks the Python floor
-    only, and r13 measured the two DECOUPLING on this VM family: a session
-    read the Python kernel 18% FASTER than the anchor's while
-    plan-identical suite walls ran 12-40% slower (VERDICT r13 item 1 —
-    the suite is mostly JVM wall, so the kernel proxy can both fake and
-    mask drift). Recording both signals per run lets the refreeze fence
-    require BOTH within drift bounds and makes uniform-elevation verdicts
-    mechanical. Median of 5 after one untimed warm-up; raw seconds, never
-    folded into the query timings."""
-    from pyspark.sql import functions as F
-
-    def run() -> None:
-        materialize(
-            spark.range(0, 10_000_000, 1, 32)
-            .select((F.col("id") % 9973).alias("k"), F.col("id").alias("v"))
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-        )
-
-    run()  # warm-up (untimed): codegen + first-stage scheduling
-    runs = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        run()
-        runs.append(time.perf_counter() - t0)
-    return round(statistics.median(runs), 4)
-
-
-def _time_query(spark, fn, n_runs: int = N_RUNS) -> list[float]:
-    materialize(fn(spark, SF_DIR))  # warm-up (untimed)
+def time_query(spark, fn, n_runs: int = N_RUNS, sf_dir: str = SF_DIR) -> list[float]:
+    """One untimed warm-up, then ``n_runs`` timed noop writes (seconds)."""
+    materialize(fn(spark, sf_dir))
     runs = []
     for _ in range(n_runs):
         t0 = time.perf_counter()
-        materialize(fn(spark, SF_DIR))
+        materialize(fn(spark, sf_dir))
         runs.append(time.perf_counter() - t0)
     return runs
 
 
-GATE_RATIO = 2.0  # the per-query bench gate (tests/test_bench_guard.py)
-NOISE_FLOOR_SEC = 0.3  # mirrors tests/test_bench_guard.py: sub-0.3s values
-# are stage-scheduling jitter, on EITHER side of the ratio (r13) — a query
-# anchored at 0.21s that reads 0.54s is 0.33s of absolute drift, not a
-# 2.6x regression; suspects are judged against max(anchor, floor).
+def median_times(names: list[str], n_runs: int = N_RUNS) -> dict[str, float]:
+    """Median seconds per named query, all timed in one fresh session.
 
+    Shuffle partitions follow the actual parallelism: at sf0.1 on a
+    32-core local box, 200 (Spark's default) means tiny tasks and 6x the
+    scheduling/checkpoint overhead on the iterative ops (A/B: CC 4.0s ->
+    3.0s, minhash_verified 2.8s -> 2.0s). At cluster scale the same knob
+    is sized to data volume instead — see session.py docstring."""
+    from glue_etl_framework_spark import get_spark
+    from glue_etl_framework_spark.queries import load_registry
 
-def gate_trip_suspects(
-    timings: dict[str, float],
-    anchor: dict[str, float],
-    ratio: float = GATE_RATIO,
-) -> list[str]:
-    """Names whose median landed past the per-query gate vs the frozen
-    anchor — the candidates for a fresh-SparkContext re-time (r11 finding:
-    a long session can mis-time one query >2x with a zero-line diff).
-    Queries absent from the anchor (new this round) or anchored at 0 are
-    never suspects: there is nothing to trip against. Sub-noise-floor
-    anchors are floored (see NOISE_FLOOR_SEC) so jitter-scale absolute
-    drift on tiny queries doesn't burn a fresh-context retry."""
-    return sorted(
-        n for n, sec in timings.items()
-        if anchor.get(n, 0) > 0 and sec > ratio * max(anchor[n], NOISE_FLOOR_SEC)
-    )
-
-
-def subfloor_cluster_drift(
-    timings: dict[str, float],
-    anchor: dict[str, float],
-    floor: float = NOISE_FLOOR_SEC,
-) -> tuple[float, float, list[str]]:
-    """(net_drift_sec, budget_sec, positive-drift names) over the queries
-    ANCHORED below the noise floor. Flooring both sides of the per-query
-    ratio (r13) means a sub-floor query can drift to ~2*floor without
-    tripping; ADVICE r13: a CLUSTER of such drifts is real time that would
-    otherwise feed the next refreeze unchallenged. The NET sum cancels
-    symmetric scheduling jitter (one query +0.2s, another -0.2s) while a
-    cluster of genuine regressions is all-positive and sums intact; the
-    budget allows the floor per floored query plus ONE floor of headroom,
-    so a lone floored query's jitter stays the per-query floor rule's
-    business and never trips the cluster check first. When
-    net_drift > budget, the positive-drift members become fresh-context
-    retry suspects alongside the per-query gate trips."""
-    floored = [
-        (q, sec) for q, sec in timings.items()
-        if q in anchor and 0 < anchor[q] < floor
-    ]
-    drift = sum(sec - anchor[q] for q, sec in floored)
-    budget = (len(floored) + 1) * floor
-    names = sorted(q for q, sec in floored if sec > anchor[q])
-    return drift, budget, names
-
-
-def retry_resolved_value(first_runs: list[float], retry_runs: list[float]) -> float:
-    """Recorded value after a fresh-context retry = the SMALLER of the two
-    sessions' medians. Accumulated session state (block-manager pressure,
-    localCheckpoint GC, scheduler backlog) only ever INFLATES timings — a
-    fresh context cannot make a genuinely regressed plan fast — so the
-    lower median is the truthful reading and a transient of ANY size is
-    outvoted. (A combined-runs median only outvoted transients below ~3x:
-    a 4x mis-time merged with a clean 1.0x retry lands at 2.5x and still
-    trips the gate on a zero-line diff.) A real regression is slow in
-    BOTH sessions, so min() keeps it flagged. Both medians are recorded
-    in BENCH_DETAIL (retry_medians) so the resolution is auditable."""
-    return round(
-        min(statistics.median(first_runs), statistics.median(retry_runs)), 4
-    )
-
-
-def _anchor_queries() -> dict[str, float]:
-    p = Path(__file__).with_name("BASELINE_BENCH.json")
-    if not p.exists():
-        return {}
-    try:
-        return json.loads(p.read_text()).get("queries", {})
-    except (OSError, ValueError):
-        return {}
-
-
-def main() -> None:
-    # Size shuffle partitions to the actual parallelism: at sf0.1 on a
-    # 32-core local box, 200 (Spark's default) means tiny tasks and 6x the
-    # scheduling/checkpoint overhead on the iterative ops (A/B: CC 4.0s ->
-    # 3.0s, minhash_verified 2.8s -> 2.0s). At cluster scale the same knob
-    # is sized to data volume instead — see session.py docstring.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
     spark = get_spark(app_name="bench", shuffle_partitions=cpus)
-    jvm_cal = jvm_calibration_sec(spark)  # at bench start, warm session
     registry = load_registry()
-    names = [n for n in HEADLINE if n in registry]
-    all_runs: dict[str, list[float]] = {}
-    for name in names:
-        all_runs[name] = _time_query(spark, registry[name].fn)
-    timings = {n: round(statistics.median(r), 4) for n, r in all_runs.items()}
-    # Session-transient screen (r11 finding): a long bench session can
-    # mis-time individual queries by >2x with a zero-line diff — one r11
-    # session read agg_exact_median_twopass at 2.38x of anchor while a
-    # fresh session read 0.99x on the same tree. Any query whose median
-    # lands past the 2x gate is re-timed ONCE on a FRESH SparkContext
-    # (accumulated block-manager/localCheckpoint state cleared), and
-    # the recorded value is the median of ALL 2*N_RUNS timed runs: a real
-    # regression is slow in both sessions and stays flagged; a session
-    # transient is outvoted. Retries are recorded in the detail JSON so
-    # the screen is auditable, never silent.
-    anchor = _anchor_queries()
-    suspects = gate_trip_suspects(timings, anchor)
-    # Sub-floor cluster screen (ADVICE r13): flooring exempts individually
-    # tiny queries from the gate, but a CLUSTER of them drifting together
-    # is real time — retry the positive-drift members too so an inflated
-    # reading can't ride into the next refreeze unchallenged.
-    cluster_drift, cluster_budget, cluster_names = subfloor_cluster_drift(
-        timings, anchor
-    )
-    if cluster_drift > cluster_budget:
-        suspects = sorted(set(suspects) | set(cluster_names))
-    retry_medians: dict[str, list[float]] = {}
-    jvm_cal_retry: float | None = None
-    if suspects:
-        spark.stop()
-        spark = get_spark(app_name="bench-retry", shuffle_partitions=cpus)
-        # ADVICE r14: the retry session contributes recorded medians, so
-        # its JVM speed must be calibrated too — otherwise the refreeze
-        # fence vouches for timings from a session it never measured.
-        jvm_cal_retry = jvm_calibration_sec(spark)
-        for name in suspects:
-            retry_runs = _time_query(spark, registry[name].fn)
-            retry_medians[name] = [
-                round(statistics.median(all_runs[name]), 4),
-                round(statistics.median(retry_runs), 4),
-            ]
-            timings[name] = retry_resolved_value(all_runs[name], retry_runs)
-            all_runs[name] += retry_runs
+    return {
+        n: round(statistics.median(time_query(spark, registry[n].fn, n_runs)), 4)
+        for n in names
+    }
+
+
+def main(names: list[str]) -> None:
+    timings = median_times(names or HEADLINE)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Per-query detail goes to its own (earlier) stdout line AND a file:
-    # the driver's tail capture is ~2000 chars, and r5 proved that 57
-    # queries x long names pushes a single combined line past it (the
-    # driver recorded parsed:null). The FINAL line is the compact
-    # machine-readable summary and must stay well under the window.
-    detail = {
-        "detail_queries": timings,
-        "sf": sf_val,
-        "box_cal_sec": box_calibration_sec(),
-        "jvm_cal_sec": jvm_cal,
-    }
-    if suspects:
-        detail["retried_in_fresh_session"] = sorted(suspects)
-        detail["retry_medians"] = retry_medians
-        detail["jvm_cal_sec_retry"] = jvm_cal_retry
-    if cluster_drift > cluster_budget:
-        # ADVICE r14: the PRE-retry sum is the trigger, not the verdict —
-        # after fresh-session retries resolve the cluster members, the
-        # stale trigger value read as an unresolved regression. Record the
-        # trigger under its own key and the post-retry recomputation under
-        # the headline key.
-        detail["subfloor_cluster_drift_trigger_sec"] = round(cluster_drift, 4)
-        post_drift, _, _ = subfloor_cluster_drift(timings, anchor)
-        detail["subfloor_cluster_drift_sec"] = round(post_drift, 4)
-    Path(__file__).with_name("BENCH_DETAIL.json").write_text(
-        json.dumps(detail, indent=2) + "\n"
-    )
-    print(json.dumps(detail))
-    print(final_summary_line(timings, sf_val, detail["box_cal_sec"], jvm_cal))
+    print(final_summary_line(timings, sf_val))
 
 
-def final_summary_line(
-    timings: dict[str, float], sf_val, box_cal: float, jvm_cal: float
-) -> str:
+def final_summary_line(timings: dict[str, float], sf_val) -> str:
     """The contract line: ONE JSON object whose LAST-line position and
     length both matter. The driver's stdout tail capture is 2000 chars
     (measured: BENCH_r15.json's recorded tail is exactly 2000), and its
     per-query comparator went blind in r14/r15 (`PERF per_query: {}`)
-    because the queries dict lived only in the longer detail line, whose
-    FRONT the tail truncated mid-JSON. Fix (VERDICT r15 item 6): put the
-    per-query dict IN the final line — as the driver contract always
-    specified — at 2-decimal precision with compact separators. When
+    when the queries dict lived only in an earlier, longer line whose
+    FRONT the tail truncated mid-JSON. So the per-query dict is IN the
+    final line, at 2-decimal precision with compact separators. When
     4-digit per-query seconds would push the line (plus its newline) past
     SUMMARY_LINE_BUDGET, the per-query values drop to 1 decimal, then to
-    whole seconds (tests/test_bench_guard.py pins the fit at 9999.99 s).
-    Full 4-decimal detail still goes to BENCH_DETAIL.json and the earlier
-    detail stdout line; timing methodology is unchanged."""
+    whole seconds (tests/test_bench_guard.py pins the fit at 9999.99 s)."""
     for ndigits in (2, 1, None):
         line = json.dumps(
             {
@@ -355,8 +163,6 @@ def final_summary_line(
                 "queries": {n: round(s, ndigits) for n, s in timings.items()},
                 "sf": sf_val,
                 "n_queries": len(timings),
-                "box_cal_sec": round(box_cal, 4),
-                "jvm_cal_sec": round(jvm_cal, 4),
             },
             separators=(",", ":"),
         )
@@ -366,4 +172,4 @@ def final_summary_line(
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -37,25 +37,9 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => non-SQL-expressible; driver does rows-only
     category: str
-    # Tie-break within the never-checked and green tiers of
-    # load_registry(): entries added while an attestation backlog exists
-    # set this >0 so they queue BEHIND the backlog in the driver window
-    # and can never displace it (VERDICT r06 item 5). Once green they stay
-    # at the registry tail only while RECENTLY attested: when the green
-    # row's on-disk age reaches STALE_OVERRIDE_AGE - 1 (true staleness at
-    # the upcoming check = the ceiling) the rank is overridden so the
-    # entry re-enters the staleness refresh (ADVICE r09). Ignored for
-    # FAILED entries — a failure re-enters the very next window
-    # regardless of rank (ADVICE r07).
-    window_rank: int = 0
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-# One full staleness rotation is ~ceil(322 green entries / 42-slot window)
-# ≈ 8 rounds. A green window_rank>0 entry older than this re-enters the
-# staleness refresh like any rank-0 entry (see load_registry).
-STALE_OVERRIDE_AGE = 8
 
 # Queries whose plans aggregate over an exploded (doc_a, doc_b)
 # candidate-pair stream — the class whose partial-aggregation buffers
@@ -80,11 +64,11 @@ PAIR_EMITTING_QUERIES = frozenset({
 })
 
 
-def register(name: str, oracle: str | None, category: str, window_rank: int = 0):
+def register(name: str, oracle: str | None, category: str):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, category, window_rank)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, category)
         return fn
     return deco
 
@@ -152,14 +136,8 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_table(spark, sf_dir, name)
 
 
-# Registration order drives the driver's CORRECTNESS sampling (it records the
-# first N registry entries). Rounds 1-4 attested 200/321 (see
-# CORRECTNESS_r*.json; _driver_checked_names sorts those to the back).
-# Round-5 window: all 22 tpch + all 20 io_ops (the reference's core workload
-# shape and its entire §2.1 scan/sink surface — the most user-visible
-# unattested code), then the events.py core fills the remaining ~8 slots.
-# Round-6 plan (ROUND5_NOTES.md): remaining events + aggregates sketches +
-# functions/udf + streaming_live parity twins.
+# Module order of the registry (load_registry). The driver's correctness
+# window is ordered from it in __spark_entry__.py.
 _MODULES = [
     "tpch",
     "io_ops",
@@ -179,158 +157,15 @@ _MODULES = [
 ]
 
 
-def _driver_history() -> tuple[set[str], set[str], dict[str, int]]:
-    """(passed, failed, last_pass_round) from past driver CORRECTNESS rounds.
-
-    The driver's correctness window is the first ~50 entries of ``queries()``
-    per round, so rotation is the only way every operator eventually gets a
-    driver row. Reading past CORRECTNESS_r*.json makes the rotation
-    self-maintaining. An entry whose LATEST driver row was red (hash/rows/
-    schema mismatch or an error) counts as FAILED, not checked — it must
-    re-enter the very next window so the fix gets its green row.
-
-    ``last_pass_round`` maps each passed name to the (1-based) index of the
-    most recent round whose row for it was green — the green tier sorts by
-    it ascending (STALEST first), so once the whole registry is green the
-    window keeps rotating as a staleness refresh instead of freezing on the
-    first modules forever (round-9 change; before it, an all-green registry
-    re-attested the same tpch/io head every round and the tail never got a
-    fresh row).
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    # The rows-only gate below consults REGISTRY[name].category, so the
-    # query modules must be imported regardless of whether the caller went
-    # through load_registry() first (idempotent).
-    for mod in _MODULES:
-        importlib.import_module(f"glue_etl_framework_spark.queries.{mod}")
-
-    repo_root = Path(__file__).resolve().parents[2]
-    latest: dict[str, bool] = {}
-    last_pass: dict[str, int] = {}
-    # Sort and number rounds by the EXTRACTED round number, not filename
-    # lexicographic order — zero-padded names break at r100 (r100 would sort
-    # between r10 and r11), mis-ordering both latest-wins and the staleness
-    # ranking (ADVICE r09). Rounds may be missing (r08 never ran): last_pass
-    # stores the true round number, so staleness gaps are measured honestly.
-    rounds = sorted(
-        (int(m.group(1)), f)
-        for f in repo_root.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"_r(\d+)\.json$", f.name))
-    )
-    for rnd, f in rounds:
-        try:
-            data = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                latest[name] = True
-                last_pass[name] = rnd
-                continue
-            # err == "no_oracle" with a recorded row count is the
-            # documented rows-only contract SUCCEEDING for a live
-            # streaming drain (its value certification is the hash-green
-            # _parity twin), not a failure: counting it as failed pinned
-            # all 8 streaming entries to the window head every round
-            # (r07, r09), spending 8 of 50 slots re-running checks that
-            # can never get stronger. Green rows rotate by staleness.
-            err = row.get("err")
-            # Restricted to registered streaming entries — the only
-            # category whose rows-only contract is value-certified by a
-            # hash-green *_parity twin. A future oracle-less entry in any
-            # other category must NOT rotate out on a bare row count
-            # (ADVICE r10). bool is excluded explicitly: it subclasses int.
-            sr = row.get("spark_rows")
-            spec = REGISTRY.get(name)
-            rows_only_ok = (
-                err == "no_oracle"
-                and spec is not None
-                and spec.category == "streaming"
-                and isinstance(sr, int)
-                and not isinstance(sr, bool)
-                and sr >= 0
-            )
-            ok = (err is None or rows_only_ok) and not any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            )
-            latest[name] = ok
-            if ok:
-                last_pass[name] = rnd
-    passed = {n for n, ok in latest.items() if ok}
-    failed = {n for n, ok in latest.items() if not ok}
-    return passed, failed, last_pass
-
-
 def load_registry() -> dict[str, QuerySpec]:
-    """Import all query modules (idempotent) and return the registry,
-    ordered for the driver's windowed correctness check: previously-FAILED
-    entries first (their fix needs a green row immediately), then
-    never-checked entries (module-priority order, insertion order within a
-    module), then everything already green ordered STALEST-ATTESTATION-FIRST
-    (so the window rotates through the whole registry as a staleness
-    refresh once everything is green) — see _driver_history."""
+    """Import all query modules (idempotent) and return the registry in
+    module order (``_MODULES``), insertion order within a module."""
     for mod in _MODULES:
         importlib.import_module(f"glue_etl_framework_spark.queries.{mod}")
-    passed, failed, last_pass = _driver_history()
     mod_rank = {m: i for i, m in enumerate(_MODULES)}
-    order = list(REGISTRY)
-    latest_round = max(last_pass.values(), default=0)
-
-    def tier(name: str) -> int:
-        if name in failed:
-            return 0
-        if name in passed:
-            return 2
-        return 1
-
-    def effective_rank(name: str, tr: int) -> int:
-        # window_rank queues late additions behind the attestation backlog
-        # (never-checked tier) and keeps a RECENTLY-green late addition at
-        # the registry tail — but it must not exclude an entry from the
-        # staleness refresh forever. Two overrides:
-        # - a FAILED entry re-enters the very next window regardless of
-        #   rank (ADVICE r07: a failed rank>0 entry otherwise sorts behind
-        #   every failed rank-0 entry);
-        # - a GREEN entry nearing the staleness ceiling drops its rank so
-        #   staleness governs (ADVICE r09: a permanently-excluded green
-        #   ranked entry would go stale forever, breaking the "at most
-        #   ~one rotation period old" guarantee). The trigger is
-        #   STALE_OVERRIDE_AGE - 1 on the ON-DISK age: when the driver
-        #   loads the registry during round N, CORRECTNESS files exist
-        #   only through round N-1, so an entry last green at round P has
-        #   on-disk age N-1-P but TRUE staleness N-P at the upcoming
-        #   check. Triggering at on-disk age >= ceiling would admit the
-        #   entry one round late, at true staleness ceiling+1 (r15 fix:
-        #   the rank-1 JDBC entry, last green r7, must re-attest at r15
-        #   — exactly the ceiling — not r16).
-        if tr == 0:
-            return 0
-        if tr == 2 and latest_round - last_pass.get(name, latest_round) >= STALE_OVERRIDE_AGE - 1:
-            return 0
-        return REGISTRY[name].window_rank
-
-    ranked = sorted(
-        range(len(order)),
-        key=lambda i: (
-            tier(order[i]),
-            effective_rank(order[i], tier(order[i])),
-            # Staleness: green entries with the OLDEST last green row come
-            # first, so every entry's driver attestation stays at most
-            # ~ceil(322/42) rounds old — including ranked entries, whose
-            # rank is overridden once their true staleness at the upcoming
-            # check reaches STALE_OVERRIDE_AGE (effective_rank above).
-            # 0 for non-green tiers (no effect).
-            last_pass.get(order[i], 0) if tier(order[i]) == 2 else 0,
-            mod_rank.get(
-                REGISTRY[order[i]].fn.__module__.rsplit(".", 1)[-1], 99
-            ),
-            i,
-        ),
+    return dict(
+        sorted(
+            REGISTRY.items(),
+            key=lambda kv: mod_rank.get(kv[1].fn.__module__.rsplit(".", 1)[-1], 99),
+        )
     )
-    return {order[i]: REGISTRY[order[i]] for i in ranked}

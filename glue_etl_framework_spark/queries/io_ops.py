@@ -1502,8 +1502,7 @@ _JDBC_PART_ORACLE = """
 """
 
 
-@register("io_jdbc_partitioned_read", oracle=_JDBC_PART_ORACLE, category="io",
-          window_rank=1)
+@register("io_jdbc_partitioned_read", oracle=_JDBC_PART_ORACLE, category="io")
 def io_jdbc_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JDBC PARTITIONED scan certification (SURVEY §2.1; VERDICT r06 item 5):
     the scale path io_jdbc_roundtrip only documents — Spark's

@@ -6562,22 +6562,28 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     joins: 10 Exchanges -> 5, measured 3.38s -> ~1.6s at sf0.1. The
     frontier is eagerly checkpointed once for its three consumers. Only
     the candidate-side degree attach (db, node-count-sized) stays a
-    shuffle join — that one is data-sized and must not be hinted.
+    shuffle join in the static plan — that one is data-sized and must
+    not be hinted.
 
-    r16 (VERDICT item 7 record): the db attach stays SortMergeJoin even
-    in the AQE-FINAL executed plan at sf0.1
-    (probes/final_plan_r16_sf01_graph_link_prediction_jaccard.txt) — the
-    deg exchange's map-side partial rows (per-partition per-key) exceed
-    the 10 MB adaptive-broadcast threshold even though deg's final output
-    is small. That is the correct conservative outcome: deg is node-count
-    sized, and a broadcast hint here would OOM on a billion-node graph.
-    Stage profile at sf0.1 (2 trials): adj build+checkpoint 1.4-1.9 s of
-    the 2.5-2.9 s query; deg 0.3-0.5 s; cand wedge aggregate 0.4-0.7 s —
-    the db SMJ is not where the time goes. A half-size undirected-edge
-    checkpoint (adj as a lazy union over the blocks) was A/B'd 1.36x
-    SLOWER and reverted; the kept change is the LAZY adjacency
-    checkpoint (see inline comment), 0.97x on its sf0.1 ladder and
-    inside the ±15% noise band at 10x (probes/abx_r16opt_graph_*.txt)."""
+    The db attach plans statically as a SortMergeJoin, but the AQE-final
+    executed plan at sf0.1 (read after the DataFrame's own collect, at 4
+    and 32 shuffle partitions:
+    probes/final_plan_r16_sf01_graph_link_prediction_jaccard.txt) runs it
+    as a BroadcastHashJoin: once the deg shuffle stage has run, its
+    measured output is under the adaptive broadcast threshold, so AQE
+    demotes the join. That is the outcome to want without a hint: deg is
+    node-count sized, AQE broadcasts it only when measured small, and a
+    broadcast hint here would OOM on a billion-node graph. Stage profile
+    at sf0.1 (2 trials): adj build+checkpoint 1.4-1.9 s of the 2.5-2.9 s
+    query; deg 0.3-0.5 s; cand wedge aggregate 0.4-0.7 s — the db join
+    is not where the time goes. A half-size undirected-edge checkpoint
+    (adj as a lazy union over the blocks) read 1.36x SLOWER in r16 (3
+    bursts, ratio of minimum medians) and was reverted; 10 alternating
+    bursts at local[4] read 1.03x, inside the quartiles
+    (probes/abx_graph_half_edge_ckpt_sf01_local4.txt). The kept change is
+    the LAZY adjacency checkpoint (see inline comment), 0.97x on its
+    sf0.1 ladder and inside the ±15% noise band at 10x
+    (probes/abx_r16opt_graph_*.txt)."""
     l = t(spark, sf_dir, "lineitem")
     lp = l.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")).distinct()
     a0, b0 = lp.alias("a"), lp.alias("b")

@@ -207,12 +207,16 @@ def test_hostile_deeply_nested_schema_normalized_to_value_error():
     must surface as the documented ValueError('corrupt avro container...'),
     not a raw RecursionError escaping _make_decoder / json.loads
     (ADVICE r06)."""
-    nested = '"long"'
-    for i in range(100_000):
-        nested = (
-            '{"type":"record","name":"r%d","fields":[{"name":"f","type":%s}]}'
-            % (i, nested)
+    # Record r0 wraps "long" and r99999 is outermost; joined in one pass,
+    # since wrapping 100k times by concatenation is quadratic in the length.
+    nested = (
+        "".join(
+            '{"type":"record","name":"r%d","fields":[{"name":"f","type":' % i
+            for i in reversed(range(100_000))
         )
+        + '"long"'
+        + "}]}" * 100_000
+    )
     blob = _hostile_container(nested)
     with pytest.raises(ValueError, match="corrupt avro"):
         decode_container(blob)

@@ -173,14 +173,14 @@ def test_jdbc_partitioned_read_splits_and_matches(tmp_path, spark):
 
 def test_jdbc_partitioned_entry_queues_behind_attestation_backlog():
     """The r7 sanctioned entry must sort AFTER every never-driver-checked
-    backlog entry in the driver window (window_rank=1), so it cannot
-    displace the attestation rotation (VERDICT r06 items 1+5)."""
-    from glue_etl_framework_spark.queries import REGISTRY, _driver_history, load_registry
+    backlog entry in the driver window (a LATE_ADDITIONS member), so it
+    cannot displace the attestation rotation (VERDICT r06 items 1+5)."""
+    from __spark_entry__ import LATE_ADDITIONS, _driver_history, driver_order
 
-    names = list(load_registry())
+    names = list(driver_order())
     passed, failed, _last_pass = _driver_history()
     never = [n for n in names if n not in passed and n not in failed]
     assert "io_jdbc_partitioned_read" in never or "io_jdbc_partitioned_read" in passed
     if "io_jdbc_partitioned_read" in never:
         assert never[-1] == "io_jdbc_partitioned_read"
-    assert REGISTRY["io_jdbc_partitioned_read"].window_rank == 1
+    assert "io_jdbc_partitioned_read" in LATE_ADDITIONS

@@ -1,5 +1,5 @@
 """Pins the driver-window rotation: the driver records CORRECTNESS for the
-FIRST ~50 entries of ``queries()`` each round, so ``load_registry()``'s
+FIRST ~50 entries of ``queries()`` each round, so ``__spark_entry__``'s
 ordering IS the attestation schedule. These tests run against the repo's
 real CORRECTNESS_r*.json history."""
 
@@ -8,7 +8,9 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from glue_etl_framework_spark.queries import REGISTRY, _driver_history, load_registry
+import __spark_entry__ as entry
+from __spark_entry__ import LATE_ADDITIONS, _driver_history, driver_order
+from glue_etl_framework_spark.queries import REGISTRY, load_registry
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -20,7 +22,7 @@ def test_failed_rows_outrank_everything():
     passed, failed, _last_pass = _driver_history()
     if not failed:
         return  # nothing red on record; nothing to order
-    names = list(load_registry())
+    names = list(driver_order())
     n_failed = len(failed)
     assert set(names[:n_failed]) == failed, (
         f"previously-failed entries {sorted(failed)} must occupy the first "
@@ -30,7 +32,7 @@ def test_failed_rows_outrank_everything():
 
 def test_never_checked_precede_green():
     passed, failed, _last_pass = _driver_history()
-    names = list(load_registry())
+    names = list(driver_order())
     tiers = [0 if n in failed else 2 if n in passed else 1 for n in names]
     assert tiers == sorted(tiers), "ordering must be failed < never-checked < green"
 
@@ -52,21 +54,21 @@ def test_correctness_history_names_still_exist():
 def test_window_is_deterministic():
     """Two loads produce the identical order (the driver and our
     pre-verification sweeps must see the same window)."""
-    assert list(load_registry()) == list(load_registry())
+    assert list(driver_order()) == list(driver_order())
 
 
 def test_green_tier_orders_stalest_attestation_first():
     """Once green, entries rotate through the window oldest-attestation
-    first (round 9): among rank-0 green entries, last-pass rounds must be
+    first (round 9): among green entries that are not late additions, last-pass rounds must be
     non-decreasing in registry order, so every entry's driver row stays at
     most ~ceil(|green|/window) rounds old instead of the window freezing
     on the first modules forever."""
     passed, failed, last_pass = _driver_history()
-    names = list(load_registry())
+    names = list(driver_order())
     green_rounds = [
         last_pass[n]
         for n in names
-        if n in passed and REGISTRY[n].window_rank == 0
+        if n in passed and n not in LATE_ADDITIONS
     ]
     assert green_rounds == sorted(green_rounds), (
         "green tier must be ordered stalest-first by last green round"
@@ -76,106 +78,94 @@ def test_green_tier_orders_stalest_attestation_first():
 def test_staleness_rotation_synthetic(monkeypatch):
     """An entry last green in round 2 must enter the window before one
     last green in round 7, regardless of module order."""
-    import glue_etl_framework_spark.queries as q
-
     load_registry()
     names = list(REGISTRY)
-    rank0 = [n for n in names if REGISTRY[n].window_rank == 0]
-    stale, fresh = rank0[-1], rank0[0]  # reversed module order on purpose
+    regular = [n for n in names if n not in LATE_ADDITIONS]
+    stale, fresh = regular[-1], regular[0]  # reversed module order on purpose
     last = dict.fromkeys(names, 5)
     last[stale], last[fresh] = 2, 7
-    monkeypatch.setattr(q, "_driver_history", lambda: (set(names), set(), last))
-    ordered = list(q.load_registry())
+    monkeypatch.setattr(entry, "_driver_history", lambda: (set(names), set(), last))
+    ordered = list(driver_order())
     assert ordered.index(stale) < ordered.index(fresh)
 
 
 def test_failed_entry_with_window_rank_still_leads(monkeypatch):
-    """window_rank queues late additions behind the never-checked backlog
-    and keeps green late additions at the tail — but it must NOT delay a
-    FAILED entry's re-entry (ADVICE r07): simulate the rank-1 JDBC entry
-    going red and assert it sorts to position 0."""
-    import glue_etl_framework_spark.queries as q
-
+    """LATE_ADDITIONS queue behind the never-checked backlog and green
+    late additions keep the tail — but that must NOT delay a FAILED
+    entry's re-entry (ADVICE r07): simulate the late JDBC entry going red
+    and assert it sorts to position 0."""
     load_registry()
     ranked_name = "io_jdbc_partitioned_read"
-    assert REGISTRY[ranked_name].window_rank > 0  # the premise
+    assert ranked_name in LATE_ADDITIONS  # the premise
     others = set(REGISTRY) - {ranked_name}
     monkeypatch.setattr(
-        q, "_driver_history", lambda: (others, {ranked_name}, dict.fromkeys(others, 1))
+        entry, "_driver_history", lambda: (others, {ranked_name}, dict.fromkeys(others, 1))
     )
-    assert list(q.load_registry())[0] == ranked_name
+    assert list(driver_order())[0] == ranked_name
 
 
 def test_green_entry_with_window_rank_stays_at_tail(monkeypatch):
-    """Once green and RECENTLY attested, a rank>0 entry keeps the registry
+    """Once green and RECENTLY attested, a late addition keeps the registry
     tail so it never displaces the staleness-refresh window."""
-    import glue_etl_framework_spark.queries as q
-
     load_registry()
     ranked_name = "io_jdbc_partitioned_read"
     monkeypatch.setattr(
-        q,
+        entry,
         "_driver_history",
         lambda: (set(REGISTRY), set(), dict.fromkeys(REGISTRY, 1)),
     )
-    assert list(q.load_registry())[-1] == ranked_name
+    assert list(driver_order())[-1] == ranked_name
 
 
 def test_stale_green_ranked_entry_reenters_refresh(monkeypatch):
-    """ADVICE r09: a green rank>0 entry must NOT be excluded from the
+    """ADVICE r09: a green late addition must NOT be excluded from the
     staleness refresh forever. Once its attestation is STALE_OVERRIDE_AGE
-    rounds old, the rank is overridden and it sorts by staleness like any
+    rounds old, it sorts by staleness like any
     other green entry — here it is the stalest, so it must lead the
     green tier (position 0, no failed/never-checked entries)."""
-    import glue_etl_framework_spark.queries as q
-
     load_registry()
     ranked_name = "io_jdbc_partitioned_read"
-    assert REGISTRY[ranked_name].window_rank > 0  # the premise
+    assert ranked_name in LATE_ADDITIONS  # the premise
     latest = 20
     last = dict.fromkeys(REGISTRY, latest)
-    last[ranked_name] = latest - q.STALE_OVERRIDE_AGE
+    last[ranked_name] = latest - entry.STALE_OVERRIDE_AGE
     monkeypatch.setattr(
-        q, "_driver_history", lambda: (set(REGISTRY), set(), last)
+        entry, "_driver_history", lambda: (set(REGISTRY), set(), last)
     )
-    assert list(q.load_registry())[0] == ranked_name
+    assert list(driver_order())[0] == ranked_name
 
 
 def test_ranked_entry_rotates_at_ceiling_not_after(monkeypatch):
     """r15 fix: the on-disk history at round N covers only rounds ≤ N-1,
-    so a ranked entry with on-disk age STALE_OVERRIDE_AGE - 1 has TRUE
+    so a late addition with on-disk age STALE_OVERRIDE_AGE - 1 has TRUE
     staleness exactly the ceiling at the upcoming check. It must rotate
     into the window NOW — triggering one round later would let its
-    attestation reach ceiling+1 (the r7-green rank-1 JDBC entry at r15)."""
-    import glue_etl_framework_spark.queries as q
-
+    attestation reach ceiling+1 (the r7-green JDBC late addition at r15)."""
     load_registry()
     ranked_name = "io_jdbc_partitioned_read"
-    assert REGISTRY[ranked_name].window_rank > 0  # the premise
+    assert ranked_name in LATE_ADDITIONS  # the premise
     latest = 20
     last = dict.fromkeys(REGISTRY, latest)
-    last[ranked_name] = latest - (q.STALE_OVERRIDE_AGE - 1)
+    last[ranked_name] = latest - (entry.STALE_OVERRIDE_AGE - 1)
     monkeypatch.setattr(
-        q, "_driver_history", lambda: (set(REGISTRY), set(), last)
+        entry, "_driver_history", lambda: (set(REGISTRY), set(), last)
     )
-    assert list(q.load_registry())[0] == ranked_name
+    assert list(driver_order())[0] == ranked_name
 
 
 def test_recently_green_ranked_entry_below_boundary_keeps_tail(monkeypatch):
     """The boundary's other side: on-disk age STALE_OVERRIDE_AGE - 2
-    (true staleness ceiling-1 at the upcoming check) keeps the rank —
+    (true staleness ceiling-1 at the upcoming check) keeps it late —
     the entry stays at the tail and does not displace staler entries."""
-    import glue_etl_framework_spark.queries as q
-
     load_registry()
     ranked_name = "io_jdbc_partitioned_read"
     latest = 20
     last = dict.fromkeys(REGISTRY, latest)
-    last[ranked_name] = latest - (q.STALE_OVERRIDE_AGE - 2)
+    last[ranked_name] = latest - (entry.STALE_OVERRIDE_AGE - 2)
     monkeypatch.setattr(
-        q, "_driver_history", lambda: (set(REGISTRY), set(), last)
+        entry, "_driver_history", lambda: (set(REGISTRY), set(), last)
     )
-    assert list(q.load_registry())[-1] == ranked_name
+    assert list(driver_order())[-1] == ranked_name
 
 
 def test_round_numbers_sort_numerically(tmp_path, monkeypatch):
@@ -184,8 +174,6 @@ def test_round_numbers_sort_numerically(tmp_path, monkeypatch):
     lexicographically, which would let a stale r10 row overwrite the
     r100 verdict in latest-wins."""
     import json
-
-    import glue_etl_framework_spark.queries as q
 
     green = {"x": {"err": None, "rows_match": True, "hash_match": True}}
     red = {"x": {"err": "boom"}}
@@ -202,7 +190,7 @@ def test_round_numbers_sort_numerically(tmp_path, monkeypatch):
         return real_glob(self, pattern)
 
     monkeypatch.setattr(pathlib.Path, "glob", fake_glob)
-    passed, failed, last_pass = q._driver_history()
+    passed, failed, last_pass = entry._driver_history()
     assert "x" in passed and "x" not in failed, (
         "r100 (the true latest round) must win over r10"
     )
@@ -255,7 +243,7 @@ def test_rows_only_streaming_row_counts_as_green(tmp_path, monkeypatch):
         return real_glob(self, pattern)
 
     monkeypatch.setattr(pathlib.Path, "glob", fake_glob)
-    passed, failed, last_pass = q._driver_history()
+    passed, failed, last_pass = entry._driver_history()
     assert "stream_ok" in passed and "stream_ok" not in failed
     assert last_pass["stream_ok"] == 1
     assert "stream_broken" in failed

@@ -52,13 +52,13 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
+from bench import time_query
 from glue_etl_framework_spark import get_spark
 from glue_etl_framework_spark.queries import load_registry, t
 
@@ -237,9 +237,6 @@ def main() -> None:
         print(f"building {n}x realistic embeddings in {out_dir} ...", flush=True)
         build_realistic_embeddings(spark, n, out_dir)
 
-    def run(fn, sf_dir):
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
     import math
 
     from glue_etl_framework_spark.queries import PAIR_EMITTING_QUERIES
@@ -257,19 +254,8 @@ def main() -> None:
             ):
                 if msg:
                     print(f"WARNING: {msg}", flush=True)
-        run(fn, SRC)  # warm-up
-        base = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run(fn, SRC)
-            base.append(time.perf_counter() - t0)
-        run(fn, out_dir)  # warm-up
-        big = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run(fn, out_dir)
-            big.append(time.perf_counter() - t0)
-        b, g = statistics.median(base), statistics.median(big)
+        b = statistics.median(time_query(spark, fn, 3, SRC))
+        g = statistics.median(time_query(spark, fn, 3, out_dir))
         line = f"{name}: sf0.1 {b:.2f}s  {n}x {g:.2f}s  ratio {g / b:.1f}"
         if realistic:
             # SCALING.md's exponent convention: wall ~ volume^e.

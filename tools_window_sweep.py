@@ -1,15 +1,18 @@
 #!/usr/bin/env python
-"""Pre-flight sweep of a driver-window slice of the registry under the
-STRICT oracle harness, at one or more shuffle-partition settings.
+"""Strict-oracle sweep of registry entries, at one or more shuffle-partition
+settings: either a driver-window slice or a list of names.
 
 The driver checks 50 entries per round (CORRECTNESS_r{N}.json) in
-`load_registry()` order on a vanilla session whose shuffle partitioning we
-don't control; sweeping at both 8 and 200 partitions brackets that
-uncertainty. Results go to stdout AND probes/window_sweep_<tag>.txt so the
-evidence survives the round (the r6 session lost its /tmp sweep logs).
+`__spark_entry__.queries()` order on a vanilla session whose shuffle
+partitioning we don't control; sweeping at both 8 and 200 partitions
+brackets that uncertainty. Slices index that same order, so [0:50] is the
+next driver window. Results go to stdout AND probes/window_sweep_<tag>.txt
+so the evidence survives the round (the r6 session lost its /tmp sweep
+logs). Exit status 1 on any failure.
 
 Usage:
-    python tools_window_sweep.py [start] [end] [--tag r6] [--shuffle 8,200]
+    python tools_window_sweep.py [start end] [--tag r6] [--shuffle 8,200]
+    python tools_window_sweep.py name1,name2 [--tag r6] [--shuffle 8,200]
 """
 
 from __future__ import annotations
@@ -26,26 +29,29 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("start", nargs="?", type=int, default=0)
-    ap.add_argument("end", nargs="?", type=int, default=50)
+    ap.add_argument("window", nargs="*", default=["0", "50"],
+                    help="START END of a driver-window slice, or a comma list of names")
     ap.add_argument("--tag", default="window")
     ap.add_argument("--shuffle", default="8,200")
     args = ap.parse_args()
 
-    from glue_etl_framework_spark.queries import load_registry
+    from __spark_entry__ import driver_order
     from tests.oracle_harness import compare_query, duckdb_connection
 
-    registry = load_registry()
-    names = list(registry)[args.start : args.end]
+    registry = driver_order()
+    if len(args.window) == 2:
+        start, end = map(int, args.window)
+        names = list(registry)[start:end]
+        label = f"window sweep [{start}:{end}]"
+    else:
+        names = [n for n in args.window[0].split(",") if n]
+        label = f"names {names}"
     shuffles = [int(s) for s in args.shuffle.split(",")]
 
     out_dir = Path(__file__).with_name("probes")
     out_dir.mkdir(exist_ok=True)
     out_path = out_dir / f"window_sweep_{args.tag}.txt"
-    lines = [
-        f"# window sweep [{args.start}:{args.end}] shuffle={shuffles} "
-        f"sf_dir={SF_ORACLE} strict-harness"
-    ]
+    lines = [f"# {label} shuffle={shuffles} sf_dir={SF_ORACLE} strict-harness"]
 
     n_checks = 0
     n_fail = 0
