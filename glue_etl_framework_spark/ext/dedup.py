@@ -19,8 +19,10 @@ no driver-side graph.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from glue_etl_framework_spark.ckpt import DATA_SIZED, checkpoint_shared
 
 N_MINHASH = 8     # signature length
 BAND_SIZE = 2     # rows per LSH band -> 4 bands
@@ -239,9 +241,10 @@ def connected_component_labels(
     """(node, label) per input node: label = min id in the node's connected
     component of the pair graph. Min-id label propagation: each round joins
     current labels across edges and takes the min — converges in
-    O(component diameter) rounds; every round is two shuffles, nothing on
-    the driver, with localCheckpoint truncating lineage so the plan stays
-    flat over many rounds. Duplicate clusters from pairwise similarity are
+    O(component diameter) rounds. A round is one join and one aggregate,
+    run as ONE eager-checkpoint Spark execution that also counts the labels
+    it changed, so nothing reaches the driver and the plan stays flat over
+    many rounds. Duplicate clusters from pairwise similarity are
     near-cliques, so few rounds suffice in practice — the fixture graph
     converges in 3 — but the r11 10x-realistic probe measured a dup graph
     whose diameter EXCEEDS 10 (planted-partner chains), where the old
@@ -258,132 +261,112 @@ def connected_component_labels(
     (two-phase was also measured FASTER once diameter bites: 7.3 s vs
     12.3 s at 10x — probes/cc_twophase_compare_r11.txt).
 
-    A run that converges within the budget never warns, never falls back,
-    and builds the identical plan it always did (the oracle-attested
-    registry entry dedup_connected_components converges in 3 rounds).
+    A run that converges within the budget never warns and never falls
+    back (the oracle-attested registry entry dedup_connected_components
+    converges in 3 rounds).
 
     metrics: optional dict — records ``cc_rounds`` (propagation rounds
     executed), ``cc_converged``, and ``cc_fallback`` for the funnel audit
     (VERDICT r13 item 3). These are driver-side loop counters the
     algorithm already pays for: recording them adds ZERO Spark jobs and
     leaves the plan untouched."""
-    # Materialize the edge list ONCE: its lineage (often a full MinHash/LSH
-    # candidate pipeline) would otherwise re-execute inside EVERY round's
-    # join — measured 5x end-to-end on the minhash graph at sf0.1.
-    # Lazy: materialized (together with the initial label set) by the first
-    # fingerprint job below — the single sequential first consumer — then
-    # read as checkpoint blocks by every round's join.
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # Iterate ONLY over nodes that appear in the dup graph: isolated nodes
-    # never change label, so they join back once at the end. At corpus
-    # scale the per-round state is O(|dup graph|), not O(|corpus|) — with
-    # 1% near-dups that's 100x less shuffled per round.
-    # Lazy checkpoint, materialized by the fingerprint aggregate below —
-    # one job instead of an eager-checkpoint job PLUS a probe job. Safe
-    # here (unlike the multi-consumer frames that need eager=True): the
-    # fingerprint is the single, sequential first consumer, so the lazy
-    # first-materialization race never arises; every later consumer reads
-    # the registered checkpoint blocks.
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    # Convergence probe: labels only ever DECREASE (min propagation), so
-    # the label set changes iff anything changed this round. Fingerprint
-    # it as one (count, bit_xor(xxhash64(node, label))) row — the same
-    # type-agnostic probe the two-phase variant uses — NOT sum(label):
-    # sum silently casts non-numeric (string) ids to NULL (declaring
-    # false convergence after one round) and can overflow ANSI long
-    # arithmetic for hash-magnitude ids (r15 review).
-    def _label_fingerprint(frame):
-        return frame.select(
-            F.xxhash64("node", "label").alias("x")
-        ).agg(F.count("*").alias("c"), F.expr("bit_xor(x)").alias("h")).collect()[0]
+    labels = _graph_labels(pairs, max_iterations, metrics, a_col, b_col)
+    return _label_all_nodes(nodes, id_col, labels)
 
-    label_fp = _label_fingerprint(labels)
-    converged = False
-    rounds = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # Lazy checkpoint + fingerprint in ONE job (r15 optimization): the
-        # probe aggregate is the checkpoint's first action, so the round's
-        # plan executes exactly once INTO the checkpoint blocks during the
-        # probe — the next round's join (and the caller's final join) read
-        # the blocks, never recompute. The previous eager-then-probe shape
-        # paid two jobs per round for the same guarantee — at scale, two
-        # full passes over the label set per round instead of one.
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new_fp = _label_fingerprint(new_labels)
-        labels = new_labels
-        if new_fp == label_fp:
-            converged = True
-            break
-        label_fp = new_fp
-    if metrics is not None:
-        metrics["cc_rounds"] = rounds
-        metrics["cc_converged"] = converged
-        metrics["cc_fallback"] = not converged
-    if not converged:
-        # Propagation needs O(component diameter) rounds; exhausting the
-        # budget means some labels are NOT yet the component minimum —
-        # returning them silently would hand the caller wrong components
-        # (r11). Warn loudly, then fall back.
-        import warnings
 
-        warnings.warn(
-            f"connected_component_labels exhausted max_iterations="
-            f"{max_iterations} before converging — propagation's labels are "
-            f"NOT final component minima (the graph's diameter exceeds the "
-            f"round budget); falling back to connected_component_labels_twophase "
-            f"(O(log^2 n) rounds regardless of diameter; it warns separately "
-            f"if its own round budget were ever to run out).",
-            UserWarning,
-            stacklevel=2,
-        )
-        # Hand twophase the already-materialized edge set, NOT the raw
-        # pairs frame: pairs' lineage is often a full MinHash/LSH
-        # candidate pipeline (re-executing it measured 5x end-to-end,
-        # see the edges checkpoint above), and edges is equivalent
-        # input — twophase canonicalizes/distincts its edges anyway.
-        # SEED it with the partially-propagated labels as extra edges
-        # (ADVICE r12): label(n) is the min id reached from n along
-        # real edges, so (n, label(n)) connects nodes already in one
-        # component — the component partition is unchanged, but star
-        # contraction starts from a graph the exhausted rounds already
-        # partially collapsed (long chains become shortcuts to the
-        # frontier minimum) instead of discarding that work entirely.
-        label_edges = labels.filter(F.col("node") != F.col("label")).select(
-            F.col("node").alias("id_a"), F.col("label").alias("id_b")
-        )
-        return connected_component_labels_twophase(
-            nodes,
-            edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-            .union(label_edges),
-            id_col,
-        )
+def _label_all_nodes(nodes: DataFrame, id_col: str, labels: DataFrame) -> DataFrame:
+    """(node, label) per distinct id of ``nodes``: graph labels joined
+    back, every node outside the graph labelling itself."""
     all_nodes = nodes.select(F.col(id_col).alias("node")).distinct()
     return all_nodes.join(labels, "node", "left").select(
         "node", F.coalesce("label", F.col("node")).alias("label")
     )
+
+
+def _graph_labels(
+    pairs: DataFrame, max_iterations: int, metrics: dict | None, a_col: str, b_col: str
+) -> DataFrame:
+    """(node, label) for the pair graph's nodes only: isolated nodes never
+    change label, so per-round state is O(|dup graph|), not O(|corpus|)."""
+    # Materialize the edge list ONCE: its lineage (often a full MinHash/LSH
+    # candidate pipeline) would otherwise re-execute inside EVERY round's
+    # join — measured 5x end-to-end on the minhash graph at sf0.1. Lazy:
+    # round 1 is its single, sequential first consumer. A null endpoint
+    # never joins a label, so its edge is dropped here rather than give a
+    # null node a label that could change after every real node settled.
+    edges = checkpoint_shared(
+        _symmetrize(
+            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).dropna()
+        ).distinct(),
+        size_class=DATA_SIZED,
+        eager=False,
+    )
+    labels = None
+    converged = False
+    rounds = 0
+    for _ in range(max_iterations):
+        rounds += 1
+        if labels is None:
+            # From identity labels, round 1 is one aggregate over the edges.
+            step = edges.groupBy(F.col("src").alias("node")).agg(
+                F.least(F.col("src"), F.min("dst")).alias("label")
+            ).withColumn("old", F.col("node"))
+        else:
+            # Each node's own label (as ``old``) plus its neighbours' labels.
+            own = labels.withColumn("old", F.col("label"))
+            nbr = edges.join(labels.withColumnRenamed("node", "dst"), "dst").select(
+                F.col("src").alias("node"),
+                "label",
+                F.lit(None).cast(labels.schema["label"].dataType).alias("old"),
+            )
+            step = own.unionByName(nbr).groupBy("node").agg(
+                F.min("label").alias("label"), F.max("old").alias("old")
+            )
+        # Labels only DECREASE, so the round converged iff none dropped; the
+        # count rides on the round's checkpoint job. It observes the TOP of
+        # the frame: AQE's empty-relation rewrite drops CollectMetrics
+        # nodes inside an empty subtree (see io.writers.delete).
+        changed = Observation()
+        labels = checkpoint_shared(
+            step.observe(changed, F.count_if(F.col("label") < F.col("old")).alias("n")),
+            size_class=DATA_SIZED,
+        ).select("node", "label")
+        if changed.get["n"] == 0:
+            converged = True
+            break
+    if metrics is not None:
+        metrics["cc_rounds"] = rounds
+        metrics["cc_converged"] = converged
+        metrics["cc_fallback"] = not converged
+    if converged:
+        return labels
+    # Propagation needs O(component diameter) rounds; exhausting the
+    # budget means some labels are NOT yet the component minimum —
+    # returning them silently would hand the caller wrong components
+    # (r11). Warn loudly, then fall back.
+    import warnings
+
+    warnings.warn(
+        f"connected_component_labels exhausted max_iterations="
+        f"{max_iterations} before converging — propagation's labels are "
+        f"NOT final component minima (the graph's diameter exceeds the "
+        f"round budget); falling back to connected_component_labels_twophase "
+        f"(O(log^2 n) rounds regardless of diameter; it warns separately "
+        f"if its own round budget were ever to run out).",
+        UserWarning,
+        stacklevel=3,
+    )
+    # Hand twophase the already-materialized edge set, NOT the raw pairs
+    # frame (its lineage is often a full MinHash/LSH candidate pipeline),
+    # SEEDED with the partially-propagated labels as extra edges (ADVICE
+    # r12): (n, label(n)) joins nodes already in one component, so the
+    # partition is unchanged, but star contraction starts from the graph
+    # the exhausted rounds already partially collapsed.
+    if labels is not None:
+        edges = edges.union(
+            labels.filter(F.col("node") != F.col("label")).toDF("src", "dst")
+        )
+    return _star_labels(edges, 20, "src", "dst")
 
 
 def dedup_keep_representative(
@@ -400,12 +383,14 @@ def dedup_keep_representative(
     connected_component_labels: labels are always final component minima,
     so no document is dropped on a non-final label; metrics passes
     through, so a funnel audit reads the CC round count from the same dict
-    the emitter levers wrote their dropped mass into)."""
-    labels = connected_component_labels(
-        df, pairs, id_col, max_iterations, metrics=metrics, a_col=a_col, b_col=b_col,
+    the emitter levers wrote their dropped mass into). Rows with a null id
+    are dropped; duplicate rows are kept. One anti-join against the graph's
+    non-minimum nodes, so ``df``'s lineage runs once."""
+    labels = _graph_labels(pairs, max_iterations, metrics, a_col, b_col)
+    losers = labels.filter(F.col("node") != F.col("label")).select(
+        F.col("node").alias(id_col)
     )
-    keep = labels.filter(F.col("node") == F.col("label")).select(F.col("node").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
+    return df.filter(F.col(id_col).isNotNull()).join(losers, id_col, "left_anti")
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -468,15 +453,24 @@ def connected_component_labels_twophase(
     fingerprint of the canonical edge set — no driver-side graph. XOR (not
     SUM) because the edge set is distinct, XOR is order-independent, and
     it cannot overflow under ANSI arithmetic."""
-    edges = (
+    labels = _star_labels(pairs, max_iterations, a_col, b_col)
+    return _label_all_nodes(nodes, id_col, labels)
+
+
+def _star_labels(
+    pairs: DataFrame, max_iterations: int, a_col: str, b_col: str
+) -> DataFrame:
+    """(node, label) for the nodes of the pair graph only, by star
+    contraction (connected_component_labels_twophase)."""
+    edges = checkpoint_shared(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        size_class=DATA_SIZED,
     )
-    graph_nodes = (
-        _symmetrize(edges).select(F.col("src").alias("node")).distinct()
-        .localCheckpoint(eager=True)
+    graph_nodes = checkpoint_shared(
+        _symmetrize(edges).select(F.col("src").alias("node")).distinct(),
+        size_class=DATA_SIZED,
     )
 
     def fingerprint(e: DataFrame):
@@ -492,7 +486,9 @@ def connected_component_labels_twophase(
     fp = fingerprint(edges)
     converged = False
     for _ in range(max_iterations):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        edges = checkpoint_shared(
+            _small_star(_large_star(edges)), size_class=DATA_SIZED
+        )
         new_fp = fingerprint(edges)
         if new_fp == fp:
             converged = True
@@ -513,21 +509,16 @@ def connected_component_labels_twophase(
             f"returned labels may not be final component minima; raise "
             f"max_iterations (O(log^2 n) alternations suffice for any graph).",
             UserWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
     # Converged edge set is a star per component: (node, root) with
-    # root < node. Roots and isolated nodes label themselves. The min
-    # aggregate (not distinct) keeps the one-row-per-node contract even on
-    # a truncated, not-yet-star edge set; on a converged star it is the
-    # identical frame.
+    # root < node. Roots label themselves. The min aggregate (not
+    # distinct) keeps the one-row-per-node contract even on a truncated,
+    # not-yet-star edge set; on a converged star it is the identical frame.
     star = edges.select(
         F.greatest("src", "dst").alias("node"), F.least("src", "dst").alias("label")
     ).groupBy("node").agg(F.min("label").alias("label"))
-    labels = graph_nodes.join(star, "node", "left").select(
-        "node", F.coalesce("label", F.col("node")).alias("label")
-    )
-    all_nodes = nodes.select(F.col(id_col).alias("node")).distinct()
-    return all_nodes.join(labels, "node", "left").select(
+    return graph_nodes.join(star, "node", "left").select(
         "node", F.coalesce("label", F.col("node")).alias("label")
     )
 

@@ -445,10 +445,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster step of near-dup dedup, ORACLE-CHECKED (rare for an iterative
     distributed algorithm; the DuckDB side is a recursive-CTE transitive
     closure, the Spark side min-id label propagation from ext.dedup:
-    O(component diameter) rounds of two shuffles each, lineage truncated
-    per round via localCheckpoint, nothing driver-side). component = the
-    smallest doc_id reachable through shared LSH bands; singleton docs are
-    their own component. Near-dup clusters are near-cliques, so the loop
+    O(component diameter) rounds of one join and one aggregate each, every
+    round one checkpoint job that also counts changed labels, nothing
+    driver-side). component = the smallest doc_id reachable through shared
+    LSH bands; singleton docs are their own component. Near-dup clusters are near-cliques, so the loop
     converges in 2-3 rounds regardless of corpus size."""
     from glue_etl_framework_spark.ext.dedup import connected_component_labels
 
@@ -847,15 +847,18 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver hash-match certifies both the prefix filter's losslessness
     and the collision-free equivalence of the hashed computation.
 
-    r15 optimization note — checkpointing REJECTED by measurement: the
-    static plan shows the shingle/prefix subtrees replicated 8x (46
-    Exchange nodes), which looks like the dedup_minhash_verified diamond,
-    but at runtime AQE's ReusedExchange already deduplicates the identical
-    exchanges, so eager localCheckpoints on sh/prefix/cand only added
-    three serial materialization barriers — measured 1.49x SLOWER at
-    sf0.1 (interleaved cross-tree A/B, probes/abx_r15opt_main.txt).
-    Static Exchange counts overstate executed shuffles wherever the
-    duplicated subtrees are exchange-identical."""
+    r15 optimization note — checkpointing stays reverted: the static plan
+    shows the shingle/prefix subtrees replicated 8x (46 Exchange nodes),
+    which looks like the dedup_minhash_verified diamond, but at runtime
+    AQE's ReusedExchange already deduplicates the identical exchanges, so
+    eager localCheckpoints on sh/prefix/cand buy no saved shuffle. The r15
+    reading of 1.49x slower at sf0.1 (probes/abx_r15opt_main.txt) rested
+    on 1-3 bursts compared by minimum medians; ten later alternating
+    bursts at sf0.1 on local[4] read 0.873x
+    (probes/abx_prefix_eager_ckpt_sf01_local4.txt), so the variant was
+    not shown slower either — only without a gain to keep it. Static
+    Exchange counts overstate executed shuffles wherever the duplicated
+    subtrees are exchange-identical."""
     from pyspark.sql import Window as W
 
     sh = _shingles(spark, sf_dir).select(
@@ -863,14 +866,16 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Global document frequency per shingle: the ordering key of the
     # canonical prefix order (shingle-keyed agg; same key as the probe
-    # join). r16 measured-and-REVERTED: a shingle-partitioned window
-    # count looked like one exchange saved, but the aggregate's output
-    # (distinct shingles) is small enough that the attach plans as a
-    # BROADCAST hash join — no shuffle of sh at all — while the window
-    # forces a full exchange+sort of the shingle stream (interleaved A/B
-    # burst: 2.58s -> 3.13s; plan: 34 -> 14 BroadcastHashJoin,
-    # +20 Window/+10 Sort). Same lesson as the r15 checkpoint revert:
-    # static-plan arithmetic loses to what AQE/broadcast actually executes.
+    # join). r16 reverted a shingle-partitioned window count: it looked
+    # like one exchange saved, but the aggregate's output (distinct
+    # shingles) is small enough that the attach plans as a BROADCAST hash
+    # join — no shuffle of sh at all — while the window forces a full
+    # exchange+sort of the shingle stream (plan: 34 -> 14
+    # BroadcastHashJoin, +20 Window/+10 Sort). Its "2.58s -> 3.13s" came
+    # from one burst; ten later alternating bursts at sf0.1 on local[4]
+    # read 0.979x (probes/abx_prefix_window_df_sf01_local4.txt), so it was
+    # not shown slower either — it stays reverted for the plan shape, not
+    # for a measured loss.
     df_ct = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     sized = sh.join(df_ct, "shingle")
     rn = F.row_number().over(

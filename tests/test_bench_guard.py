@@ -14,7 +14,7 @@ from __future__ import annotations
 import json
 import random
 
-from tools_opt_abx import TOTAL, verdicts
+from tools_opt_abx import TOTAL, burst_order, verdicts
 
 BURSTS = 10
 
@@ -32,6 +32,18 @@ def _jittered(base: float, seed: int, spread: float = 0.05) -> list[float]:
 
 def _ab(before: dict[str, list[float]], after: dict[str, list[float]]):
     return {n: {"before": before[n], "after": after[n]} for n in before}
+
+
+def test_burst_order_puts_every_query_first_equally_often():
+    """Over len(names) bursts each query leads exactly once, and every
+    burst runs each query exactly once."""
+    names = ["q0", "q1", "q2", "q3", "q4"]
+    orders = [burst_order(names, i) for i in range(2 * len(names))]
+    assert all(sorted(o) == names for o in orders)
+    firsts = [o[0] for o in orders]
+    assert all(firsts.count(n) == 2 for n in names)
+    assert orders[: len(names)] == orders[len(names):]
+    assert burst_order(["only"], 3) == ["only"]
 
 
 def test_gate_fails_uniform_regression_at_equal_calibration():

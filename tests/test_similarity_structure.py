@@ -9,6 +9,7 @@ style as tests/test_minhash_structure.py).
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -67,6 +68,32 @@ def raw_checkpoints(package: Path) -> list[str]:
     ]
 
 
+# The connected-components functions of ext/dedup.py: every checkpoint
+# there is a data-sized dup-graph frame and goes through checkpoint_shared.
+CC_FUNCTIONS = (
+    "connected_component_labels", "_graph_labels", "dedup_keep_representative",
+    "connected_component_labels_twophase", "_star_labels", "_label_all_nodes",
+    "_symmetrize", "_large_star", "_small_star",
+)
+
+
+def raw_cc_checkpoints(package: Path) -> list[str]:
+    path = package / "ext" / "dedup.py"
+    lines = dict(_code_lines(path))
+    funcs = {
+        node.name: node
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name in CC_FUNCTIONS
+    }
+    assert sorted(funcs) == sorted(CC_FUNCTIONS), "CC_FUNCTIONS is stale"
+    return [
+        f"ext/dedup.py:{i} ({name})"
+        for name, node in funcs.items()
+        for i in range(node.lineno, node.end_lineno + 1)
+        if RAW_CHECKPOINT.search(lines[i])
+    ]
+
+
 def test_queries_build_no_similarity_pieces():
     copies = similarity_copies(PACKAGE)
     assert not copies, (
@@ -82,6 +109,12 @@ def test_no_module_imports_pyspark_ml():
 def test_similarity_modules_checkpoint_through_ckpt():
     """Every checkpoint states its size class via ckpt.checkpoint_shared."""
     assert not raw_checkpoints(PACKAGE)
+
+
+def test_connected_components_checkpoint_through_ckpt():
+    """The CC rounds, edge sets and star contraction state their size
+    class via ckpt.checkpoint_shared, never a raw localCheckpoint."""
+    assert not raw_cc_checkpoints(PACKAGE)
 
 
 def test_library_topk_matches_registry_entries(spark):

@@ -9,8 +9,10 @@ on sys.path and the queries are timed by THIS tree's
 ``bench.median_times``/``time_query``, so the parent and the change are
 timed by the same code. The tree that goes first alternates from burst to
 burst, so slow host drift and first-mover effects fall evenly on both
-sides. Repeated interleaved bursts are the noise model (Blink Twice,
-SIGMOD 2025), so no host-speed calibration is needed.
+sides. The query order rotates from burst to burst too (``burst_order``),
+so no query always runs after the same neighbour. Repeated interleaved
+bursts are the noise model (Blink Twice, SIGMOD 2025), so no host-speed
+calibration is needed.
 
 The rule (``slower``): a query is flagged when the change's first quartile
 of burst medians is above the parent's third quartile. The per-burst total
@@ -66,6 +68,15 @@ def burst(tree: Path, names: list[str], runs: int) -> dict[str, float]:
     raise RuntimeError(f"burst failed in {tree}:\n{out.stdout[-2000:]}\n{out.stderr[-3000:]}")
 
 
+def burst_order(names: list[str], i: int) -> list[str]:
+    """The query order of burst ``i``: ``names`` rotated left by ``i``, so
+    over ``len(names)`` bursts every query goes first equally often and a
+    heavy query's warm-up carry-over falls on each neighbour in turn. Both
+    trees of one burst run the same order."""
+    k = i % len(names)
+    return names[k:] + names[:k]
+
+
 def quartiles(xs: list[float]) -> tuple[float, float]:
     if len(xs) < 2:
         return xs[0], xs[0]
@@ -118,7 +129,7 @@ def main() -> None:
     for i in range(args.bursts):
         order = ["before", "after"] if i % 2 == 0 else ["after", "before"]
         for side in order:
-            got = burst(trees[side], names, args.runs)
+            got = burst(trees[side], burst_order(names, i), args.runs)
             for n in names:
                 meds[n][side].append(got[n])
         print(f"burst {i} ({order[0]} first): "
