@@ -23,6 +23,7 @@ from glue_etl_framework_spark.ext.dedup import (
     minhash_signatures,
     shingle_rows,
 )
+from glue_etl_framework_spark.ext.text import normalized_text_hash
 from glue_etl_framework_spark.queries import register, t
 from glue_etl_framework_spark.queries.dedup import SHINGLE
 
@@ -166,13 +167,12 @@ def pipeline_training_data_curation(
         metrics["input_docs"] = row["n"]
         metrics["quality_removed"] = row["n"] - row["q"]
 
-    norm_hash = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     # min_by(struct, doc_id) keeps the lowest-id row per normalized hash with a
     # partial+final hash aggregate — one shuffle, no per-partition sort (the
     # row_number window formulation sorts every hash partition). doc_id is
     # unique, so the winner is deterministic.
     exact = (
-        quality.withColumn("nh", norm_hash)
+        quality.withColumn("nh", normalized_text_hash("text"))
         .groupBy("nh")
         .agg(F.min_by(F.struct("doc_id", "lang", "text", "n_tokens"), "doc_id").alias("r"))
         .select("r.doc_id", "r.lang", "r.text", "r.n_tokens")
@@ -587,7 +587,7 @@ def curation_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.size(F.split("text", " ")).cast("long").alias("n_toks"),
-        F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias("nh"),
+        normalized_text_hash("text").alias("nh"),
         "text",
     )
     exact_keep = docs.groupBy("nh").agg(F.min("doc_id").alias("doc_id")).select("doc_id")

@@ -25,6 +25,7 @@ from glue_etl_framework_spark.ext.dedup import (
     shingle_array,
     shingle_rows,
 )
+from glue_etl_framework_spark.ext.text import normalized_text_hash
 from glue_etl_framework_spark.queries import register, t
 
 SHINGLE = 3       # word n-gram size of the oracle SQL
@@ -64,11 +65,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup after normalization (lowercase, whitespace collapse) —
-    catches trivially-reformatted duplicates."""
+    catches trivially-reformatted duplicates (ext.text.normalized_text_hash)."""
     d = t(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
-        d.groupBy(F.md5(norm).alias("norm_hash"))
+        d.groupBy(normalized_text_hash("text").alias("norm_hash"))
         .agg(F.min("doc_id").alias("keep_doc"), F.count("*").alias("n_copies"))
     )
 
@@ -247,7 +247,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash over distinct tokens. Bit j of a token = the top bit
     of hex digit j of md5(token) (portable across engines); the doc bit is
     the sign of the per-bit vote sum. Near-dup pairs = small Hamming
-    distance (see dedup_simhash_pairs)."""
+    distance (see dedup_simhash_pairs).
+
+    This is not a call of ext.dedup.simhash_band_signatures, and cannot
+    become one without changing the oracle's hashes: the bits here come
+    from md5(token), while ext salts every digest as md5("b:chunk:" ||
+    token); and dedup_simhash_pairs bands this one 32-bit signature on its
+    top 16 bits, while ext builds independent word-aligned bands."""
     d = t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token")).distinct()
     bit_votes = [

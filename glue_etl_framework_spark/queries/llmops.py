@@ -7,9 +7,10 @@ steps of a large-scale pretraining-data pipeline. All JVM-side column
 expressions + keyed shuffles (no Python UDFs, no driver collection);
 determinism discipline follows queries/__init__.py (fixed-point integer
 log-prob sums, integer-ratio doubles, round(x, 6) display columns).
-
-Registered AFTER the round-2 driver window (see queries.__init__._MODULES):
-they get local-oracle coverage now and rotate into driver rows next round.
+The text verbs (lexicon hits, the language argmax, the Gopher gate, the
+PII audit) are ext.text calls with fixed parameters; this module keeps
+their DuckDB oracle SQL. The order in which the driver checks entries is
+set by __spark_entry__.driver_order.
 """
 
 from __future__ import annotations
@@ -27,7 +28,24 @@ from glue_etl_framework_spark.ext.dedup import (
     shingle_array,
     shingle_rows,
 )
+from glue_etl_framework_spark.ext.text import (
+    GOPHER_MAX_SHORT_RATIO,
+    GOPHER_MEAN_LEN_MAX,
+    GOPHER_MEAN_LEN_MIN,
+    GOPHER_MIN_STOPWORDS,
+    GOPHER_STOPWORDS,
+    GOPHER_TOKENS_MAX,
+    GOPHER_TOKENS_MIN,
+    PII_EMAIL,
+    PII_IP,
+    PII_PHONE,
+    gopher_audit_cols,
+    lexicon_hits,
+    pii_audit_cols,
+    predict_language,
+)
 from glue_etl_framework_spark.queries import register, t
+from glue_etl_framework_spark.queries.text import LEXICONS, lexicon_hits_sql
 
 _BIGRAM_SQL = """
       SELECT doc_id, unnest(list_transform(range(1, length(w)),
@@ -229,27 +247,12 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Multi-language stopword lexicons (mirrors queries.text.STOPWORDS; repeated
-# here as the single source for the confusion-matrix CASE chains so both
-# engines render the identical decision order).
-_LANGS = {
-    "de": ["der", "die", "das", "und", "zu"],
-    "en": ["the", "a", "of", "and", "to"],
-    "es": ["el", "la", "de", "y", "que"],
-    "fr": ["le", "la", "de", "et", "que"],
-}
-
-
-def _hits_sql(lang: str) -> str:
-    arr = ", ".join(f"'{w}'" for w in _LANGS[lang])
-    return f"length(list_filter(string_split(text, ' '), x -> list_contains([{arr}], x)))"
-
-
 def _predict_case_sql() -> str:
-    # explicit CASE chain in alphabetical order; >= keeps score ties on the
-    # earlier language, and zero total hits short-circuits to 'unknown'
-    langs = sorted(_LANGS)
-    hits = {lg: _hits_sql(lg) for lg in langs}
+    # the oracle of ext.text.predict_language over LEXICONS: an explicit CASE
+    # chain in alphabetical order; >= keeps score ties on the earlier
+    # language, and zero total hits short-circuits to 'unknown'
+    langs = list(LEXICONS)
+    hits = {lg: lexicon_hits_sql(LEXICONS[lg]) for lg in langs}
     any_hit = " + ".join(hits.values())
     parts = []
     for lg in langs:
@@ -286,29 +289,7 @@ def quality_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (languages x languages rows), so the only shuffled data is the
     per-(recorded, predicted) partial counts."""
     d = t(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-
-    def hits_col(lex_words):
-        # closure factory: a default-arg lambda would read as a binary
-        # (element, index) higher-order-function lambda to PySpark
-        lex = F.array(*[F.lit(w) for w in lex_words])
-        return F.size(F.filter(words, lambda x: F.array_contains(lex, x)))
-
-    hits = {lg: hits_col(_LANGS[lg]) for lg in sorted(_LANGS)}
-    langs = sorted(_LANGS)
-    any_hit = hits[langs[0]]
-    for lg in langs[1:]:
-        any_hit = any_hit + hits[lg]
-    pred = F.when(any_hit == 0, F.lit("unknown"))
-    for lg in langs:
-        cond = None
-        for other in langs:
-            if other == lg:
-                continue
-            c = hits[lg] >= hits[other]
-            cond = c if cond is None else (cond & c)
-        pred = pred.when(cond, F.lit(lg))
-    pred = pred.otherwise(F.lit("unknown"))
+    pred = predict_language(F.split(F.col("text"), " "), LEXICONS)
     cm = (
         d.select(F.col("lang").alias("lang_recorded"), pred.alias("lang_predicted"))
         .groupBy("lang_recorded", "lang_predicted")
@@ -328,47 +309,18 @@ def quality_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # blocklist filtering, domain-mixture sampling, int8 embedding quantization.
 # ---------------------------------------------------------------------------
 
-_EN_STOPWORDS = _LANGS["en"]
-
-# Gopher/MassiveText-style gate thresholds, tuned so the synthetic corpus
-# exercises both branches of every gate (docs are 10-110 tokens long).
-GOPHER_TOKENS_MIN, GOPHER_TOKENS_MAX = 20, 90
-GOPHER_MEAN_LEN_MIN, GOPHER_MEAN_LEN_MAX = 3.0, 7.0
-GOPHER_MIN_STOPWORDS = 2
-GOPHER_MAX_SHORT_RATIO = 0.2  # tokens of <= 2 chars
+_GOPHER_HITS_SQL = lexicon_hits_sql(GOPHER_STOPWORDS, "w")
 
 
-def gopher_audit_cols(text_col: str = "text") -> list:
-    """The Gopher gate battery as named Column expressions (n_tokens,
-    mean_token_len, stopword_hits, short_token_ratio, passes_gopher) —
-    shared by the batch operator below and the streaming ingest gate
-    (streaming/quality.py). Pure scan-side array expressions: usable
-    unchanged on a streaming DataFrame (no shuffle, no state)."""
-    w = F.split(text_col, " ")
-    n = F.size(w).cast("long")
-    sum_len = F.aggregate(
-        F.transform(w, lambda x: F.length(x).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    mean_len = sum_len.cast("double") / n
-    stop_arr = F.array(*[F.lit(s) for s in _EN_STOPWORDS])
-    stop_hits = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))).cast("long")
-    short_ratio = F.size(F.filter(w, lambda x: F.length(x) <= 2)).cast("double") / n
-    passes = (
-        n.between(GOPHER_TOKENS_MIN, GOPHER_TOKENS_MAX)
-        & mean_len.between(GOPHER_MEAN_LEN_MIN, GOPHER_MEAN_LEN_MAX)
-        & (stop_hits >= GOPHER_MIN_STOPWORDS)
-        & (short_ratio <= GOPHER_MAX_SHORT_RATIO)
-    )
-    return [
-        n.alias("n_tokens"),
-        F.round(mean_len, 6).alias("mean_token_len"),
-        stop_hits.alias("stopword_hits"),
-        F.round(short_ratio, 6).alias("short_token_ratio"),
-        F.when(passes, 1).otherwise(0).alias("passes_gopher"),
-    ]
-
+def _gopher_pass_sql() -> str:
+    """The oracle of ext.text.gopher_audit_cols' passes_gopher over a
+    DuckDB token-list column ``w``, shared by every entry that gates on it."""
+    return f"""(length(w) BETWEEN {GOPHER_TOKENS_MIN} AND {GOPHER_TOKENS_MAX}
+         AND CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
+             / length(w) BETWEEN {GOPHER_MEAN_LEN_MIN} AND {GOPHER_MEAN_LEN_MAX}
+         AND {_GOPHER_HITS_SQL} >= {GOPHER_MIN_STOPWORDS}
+         AND CAST(length(list_filter(w, x -> length(x) <= 2)) AS DOUBLE)
+             / length(w) <= {GOPHER_MAX_SHORT_RATIO})"""
 
 
 @register(
@@ -379,20 +331,10 @@ def gopher_audit_cols(text_col: str = "text") -> list:
            CAST(length(w) AS BIGINT) AS n_tokens,
            round(CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
                  / length(w), 6) AS mean_token_len,
-           CAST(length(list_filter(w,
-                x -> list_contains([{", ".join(repr(s) for s in _EN_STOPWORDS)}], x)))
-                AS BIGINT) AS stopword_hits,
+           CAST({_GOPHER_HITS_SQL} AS BIGINT) AS stopword_hits,
            round(CAST(length(list_filter(w, x -> length(x) <= 2)) AS DOUBLE)
                  / length(w), 6) AS short_token_ratio,
-           CASE WHEN length(w) BETWEEN {GOPHER_TOKENS_MIN} AND {GOPHER_TOKENS_MAX}
-                 AND CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                     / length(w) BETWEEN {GOPHER_MEAN_LEN_MIN} AND {GOPHER_MEAN_LEN_MAX}
-                 AND length(list_filter(w,
-                     x -> list_contains([{", ".join(repr(s) for s in _EN_STOPWORDS)}], x)))
-                     >= {GOPHER_MIN_STOPWORDS}
-                 AND CAST(length(list_filter(w, x -> length(x) <= 2)) AS DOUBLE)
-                     / length(w) <= {GOPHER_MAX_SHORT_RATIO}
-                THEN 1 ELSE 0 END AS passes_gopher
+           CASE WHEN {_gopher_pass_sql()} THEN 1 ELSE 0 END AS passes_gopher
     FROM w
     """,
     category="quality",
@@ -403,8 +345,8 @@ def quality_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and short-token share. Every gate is a pure scan-side array expression —
     no shuffle at all, so the operator is embarrassingly parallel and
     scale-free; at 100 TB it runs at scan throughput with the filter fused
-    into the parquet read. The same expressions gate streaming ingest in
-    streaming/quality.py."""
+    into the parquet read. The gate is ext.text.gopher_audit_cols, which
+    also gates streaming ingest in streaming/quality.py."""
     d = t(spark, sf_dir, "documents")
     return d.select("doc_id", *gopher_audit_cols("text"))
 
@@ -461,6 +403,7 @@ def dedup_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BADWORDS = ["slow", "merge", "batch"]  # configured blocklist (C4-style)
 BADWORD_FLAG_RATIO = 0.05
+_BAD_HITS_SQL = lexicon_hits_sql(BADWORDS, "w")
 
 
 @register(
@@ -469,15 +412,9 @@ BADWORD_FLAG_RATIO = 0.05
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
     SELECT doc_id,
            CAST(length(w) AS BIGINT) AS n_tokens,
-           CAST(length(list_filter(w,
-                x -> list_contains([{", ".join(repr(b) for b in BADWORDS)}], x)))
-                AS BIGINT) AS n_badwords,
-           round(CAST(length(list_filter(w,
-                x -> list_contains([{", ".join(repr(b) for b in BADWORDS)}], x)))
-                AS DOUBLE) / length(w), 6) AS badword_ratio,
-           CASE WHEN CAST(length(list_filter(w,
-                x -> list_contains([{", ".join(repr(b) for b in BADWORDS)}], x)))
-                AS DOUBLE) / length(w) > {BADWORD_FLAG_RATIO}
+           CAST({_BAD_HITS_SQL} AS BIGINT) AS n_badwords,
+           round(CAST({_BAD_HITS_SQL} AS DOUBLE) / length(w), 6) AS badword_ratio,
+           CASE WHEN CAST({_BAD_HITS_SQL} AS DOUBLE) / length(w) > {BADWORD_FLAG_RATIO}
                 THEN 1 ELSE 0 END AS flagged,
            md5(array_to_string(list_transform(w,
                 x -> CASE WHEN list_contains([{", ".join(repr(b) for b in BADWORDS)}], x)
@@ -497,7 +434,7 @@ def quality_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.split("text", " ")
     bad = F.array(*[F.lit(b) for b in BADWORDS])
     n = F.size(w).cast("long")
-    n_bad = F.size(F.filter(w, lambda x: F.array_contains(bad, x))).cast("long")
+    n_bad = lexicon_hits(w, BADWORDS).cast("long")
     ratio = n_bad.cast("double") / n
     redacted = F.array_join(
         F.transform(w, lambda x: F.when(F.array_contains(bad, x), F.lit("*")).otherwise(x)),
@@ -1677,36 +1614,6 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# PII patterns — RE2 (DuckDB) and Java (Spark) compatible: no lookaround,
-# word boundaries and bounded repetition only.
-PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-PII_IP = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
-PII_PHONE = r"\b\d{3}-\d{3}-\d{4}\b"
-
-
-def pii_audit_cols(text_col: str = "text") -> list:
-    """PII audit Column set shared by the batch operator below and the
-    stream-native scrubber (streaming.quality.pii_scrub_stream): per-class
-    match counts plus the fully redacted text. Pure per-row expressions —
-    no state, no shuffle — so the identical plan runs batch or streaming."""
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col(text_col), PII_EMAIL, "<EMAIL>"),
-            PII_IP, "<IP>",
-        ),
-        PII_PHONE, "<PHONE>",
-    )
-    return [
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_EMAIL), F.lit(0)))
-            .cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_IP), F.lit(0)))
-            .cast("long").alias("n_ips"),
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_PHONE), F.lit(0)))
-            .cast("long").alias("n_phones"),
-        redacted.alias("redacted"),
-    ]
-
-
 @register(
     "text_pii_scrub",
     oracle=f"""
@@ -1730,9 +1637,10 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     text with all three classes replaced by typed placeholders, applied
     in a fixed order so engines agree byte-for-byte). Patterns are
     restricted to the RE2 ∩ Java-regex subset — no lookaround — so the
-    same pattern text runs on both engines. Pure scan-side expressions:
-    zero shuffles, scales with scan bandwidth; the real scrub at 100 TB
-    is this exact plan writing `redacted` instead of its hash
+    same pattern text runs on both engines. The audit columns are
+    ext.text.pii_audit_cols. Pure scan-side expressions: zero shuffles,
+    scales with scan bandwidth; the real scrub at 100 TB is this exact
+    plan writing `redacted` instead of its hash
     (streaming.quality.pii_scrub_stream does exactly that at ingest)."""
     d = t(spark, sf_dir, "documents")
     audited = d.select("doc_id", *pii_audit_cols("text"))
@@ -2031,20 +1939,6 @@ def multimodal_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gopher_pass_sql() -> str:
-    """The Gopher pass predicate over a DuckDB token-list column ``w`` —
-    the same gate as quality_gopher_filters' oracle, factored so composite
-    reports reuse one source of truth."""
-    stop = ", ".join(repr(s) for s in _EN_STOPWORDS)
-    return f"""(length(w) BETWEEN {GOPHER_TOKENS_MIN} AND {GOPHER_TOKENS_MAX}
-         AND CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-             / length(w) BETWEEN {GOPHER_MEAN_LEN_MIN} AND {GOPHER_MEAN_LEN_MAX}
-         AND length(list_filter(w, x -> list_contains([{stop}], x)))
-             >= {GOPHER_MIN_STOPWORDS}
-         AND CAST(length(list_filter(w, x -> length(x) <= 2)) AS DOUBLE)
-             / length(w) <= {GOPHER_MAX_SHORT_RATIO})"""
-
-
 @register(
     "curation_funnel_report",
     oracle=f"""
@@ -2054,8 +1948,7 @@ def _gopher_pass_sql() -> str:
     g AS (
       SELECT doc_id, source, h,
              CASE WHEN {_gopher_pass_sql()} THEN 1 ELSE 0 END AS pass_q,
-             CASE WHEN length(list_filter(w,
-                  x -> list_contains([{", ".join(repr(b) for b in BADWORDS)}], x))) > 0 THEN 1 ELSE 0 END AS has_bad
+             CASE WHEN {_BAD_HITS_SQL} > 0 THEN 1 ELSE 0 END AS has_bad
       FROM t0
     ),
     c AS (SELECT *, CASE WHEN MIN(doc_id) OVER (PARTITION BY h) = doc_id
@@ -2076,21 +1969,19 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source curation funnel — the survivor counts after each gate
     (quality battery -> blocklist -> exact dedup) that every production
     pipeline reports per batch: where documents die decides where tuning
-    effort goes. Reuses the shared gate expressions (gopher_audit_cols,
-    the BADWORDS array) plus a canonical-by-content-hash window; one
+    effort goes. Reuses the shared gate expressions (ext.text's
+    gopher_audit_cols and lexicon_hits over BADWORDS) plus a
+    canonical-by-content-hash window; one
     shuffle on the 16-byte hash, one tiny source aggregate. Funnel stages
     are successive ANDs, so each column is a subset of the previous —
     asserted by construction, not recomputed downstream."""
     from pyspark.sql import Window as W
 
     d = t(spark, sf_dir, "documents")
-    bad = F.array(*[F.lit(b) for b in BADWORDS])
-    toks = F.split("text", " ")
     audited = d.select(
         "doc_id", "source", F.md5("text").alias("h"),
         gopher_audit_cols("text")[-1],  # passes_gopher
-        (F.size(F.filter(toks, lambda x: F.array_contains(bad, x))) > 0)
-            .cast("int").alias("has_bad"),
+        (lexicon_hits(F.split("text", " "), BADWORDS) > 0).cast("int").alias("has_bad"),
     )
     canonical = (F.min("doc_id").over(W.partitionBy("h")) == F.col("doc_id")).cast("int")
     c = audited.withColumn("canonical", canonical)

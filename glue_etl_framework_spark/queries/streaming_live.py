@@ -462,11 +462,8 @@ def streaming_live_stream_stream_join_parity(spark: SparkSession, sf_dir: str) -
 
 
 def _quality_ingest_oracle() -> str:
-    from glue_etl_framework_spark.queries.llmops import (
-        PII_EMAIL,
-        PII_IP,
-        _gopher_pass_sql,
-    )
+    from glue_etl_framework_spark.ext.text import PII_EMAIL, PII_IP
+    from glue_etl_framework_spark.queries.llmops import _gopher_pass_sql
 
     return f"""
     WITH tok AS (

@@ -13,17 +13,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from glue_etl_framework_spark.ext.text import STOPWORDS, lexicon_hits, predict_language
 from glue_etl_framework_spark.queries import register, t
 
-# Tiny stopword lexicons per language for the heuristic language scorer.
-# (Deterministic, broadcast-size; a real pipeline would load a lexicon table
-# and broadcast-join it.)
-STOPWORDS = {
-    "en": ["the", "a", "of", "and", "to"],
-    "es": ["el", "la", "de", "y", "que"],
-    "de": ["der", "die", "das", "und", "zu"],
-    "fr": ["le", "la", "de", "et", "que"],
-}
+# The registry's pinned stopword lexicons: the first five words of each
+# ext.text.STOPWORDS list, in alphabetical language order, which is the
+# tie-break order of both the Spark argmax and the oracle's CASE chain.
+LEXICONS = {lang: STOPWORDS[lang][:5] for lang in sorted(STOPWORDS)}
+
+
+def lexicon_hits_sql(lexicon: list[str], words: str = "string_split(text, ' ')") -> str:
+    """DuckDB twin of ext.text.lexicon_hits over the token-list SQL ``words``."""
+    arr = ", ".join(f"'{w}'" for w in lexicon)
+    return f"length(list_filter({words}, x -> list_contains([{arr}], x)))"
 
 
 @register(
@@ -94,36 +96,30 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_score_sql(lang: str) -> str:
-    words = STOPWORDS[lang]
-    arr = ", ".join(f"'{w}'" for w in words)
-    return (
-        f"length(list_filter(string_split(text, ' '), x -> list_contains([{arr}], x)))"
-    )
-
-
 @register(
     "text_langid_heuristic",
     oracle=f"""
     SELECT doc_id, lang AS lang_recorded,
-           CASE WHEN {_lang_score_sql('en')} >= 1 THEN 'en' ELSE 'unknown' END AS lang_predicted,
-           CAST({_lang_score_sql('en')} AS INTEGER) AS en_stopword_hits
+           CASE WHEN {lexicon_hits_sql(LEXICONS['en'])} >= 1 THEN 'en' ELSE 'unknown' END
+             AS lang_predicted,
+           CAST({lexicon_hits_sql(LEXICONS['en'])} AS INTEGER) AS en_stopword_hits
     FROM documents
     """,
     category="text",
 )
 def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-hit language ID (n-gram heuristic family). The fixture text
-    is an English-ish word soup, so the useful signal is en-vs-unknown; the
-    per-language scoring generalizes by adding lexicons to STOPWORDS."""
+    is an English-ish word soup, so the useful signal is en-vs-unknown:
+    ext.text.predict_language over the pinned English lexicon alone
+    (quality_langid_confusion scores all of LEXICONS)."""
     d = t(spark, sf_dir, "documents")
-    en = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    hits = F.size(F.filter(F.split(F.col("text"), " "), lambda x: F.array_contains(en, x)))
+    words = F.split(F.col("text"), " ")
+    en = {"en": LEXICONS["en"]}
     return d.select(
         "doc_id",
         F.col("lang").alias("lang_recorded"),
-        F.when(hits >= 1, "en").otherwise("unknown").alias("lang_predicted"),
-        hits.alias("en_stopword_hits"),
+        predict_language(words, en).alias("lang_predicted"),
+        lexicon_hits(words, en["en"]).alias("en_stopword_hits"),
     )
 
 

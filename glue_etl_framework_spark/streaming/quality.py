@@ -1,8 +1,9 @@
 """Stream-native corpus quality gating: the Gopher gate battery applied at
 ingest time, so documents failing quality never reach storage.
 
-The gates are the SAME Column expressions as the batch operator
-queries/llmops.py:quality_gopher_filters — pure per-row array expressions
+The gates are the SAME Column expressions as the batch registry entries
+(quality_gopher_filters, text_pii_scrub): ext.text.gopher_audit_cols and
+ext.text.pii_audit_cols, pure per-row array and regex expressions
 with no aggregation or state, so they run identically on a streaming
 DataFrame: no watermark needed, no shuffle, scan/ingest throughput at any
 rate. This is the production shape for 100 TB pipelines: filtering at
@@ -16,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from glue_etl_framework_spark.queries.llmops import gopher_audit_cols
+from glue_etl_framework_spark.ext.text import gopher_audit_cols, pii_audit_cols
 
 
 def quality_gate_stream(docs: DataFrame, keep_audit: bool = False) -> DataFrame:
@@ -42,14 +43,11 @@ def pii_scrub_stream(docs: DataFrame, keep_counts: bool = False) -> DataFrame:
     production posture for pretraining corpora (redaction downstream of
     landing still leaves PII in the landed files).
 
-    Same Column expressions as the batch audit operator
-    queries/llmops.py:text_pii_scrub (shared via ``pii_audit_cols``):
-    stateless per-row regexes, no watermark, no shuffle — runs at
+    Same Column expressions as the batch audit entry text_pii_scrub
+    (ext.text.pii_audit_cols): stateless per-row regexes, no watermark, no shuffle — runs at
     scan/ingest throughput on batch or streaming frames alike. With
     ``keep_counts=True`` the per-class match counts stay attached for
     per-micro-batch observability."""
-    from glue_etl_framework_spark.queries.llmops import pii_audit_cols
-
     cols = [c for c in docs.columns if c != "text"]
     audited = docs.select(*cols, *pii_audit_cols("text"))
     scrubbed = audited.withColumnRenamed("redacted", "text")

@@ -9,6 +9,7 @@ fallback reports near-misses separately so risky queries are visible.
 
 from __future__ import annotations
 
+import hashlib
 import math
 from dataclasses import dataclass, field
 
@@ -49,6 +50,12 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def result_hash(df: pd.DataFrame) -> str:
+    """First 16 hex digits of the sha256 of the sorted, normalized frame:
+    two runs with equal hashes returned equal rows."""
+    return hashlib.sha256(_normalize(df).to_csv(index=False).encode()).hexdigest()[:16]
+
+
 def _dtype_kind(s: pd.Series) -> str:
     """Coarse dtype class used for the driver-faithful strictness check.
 
@@ -80,6 +87,7 @@ class CompareResult:
     spark_rows: int = -1
     oracle_rows: int = -1
     mismatches: list[str] = field(default_factory=list)
+    spark_hash: str = ""
 
 
 def compare_query(
@@ -91,11 +99,16 @@ def compare_query(
     atol: float = 1e-12,
 ) -> CompareResult:
     sdf = spec.fn(spark, sf_dir).toPandas()
+    spark_hash = result_hash(sdf)
     if spec.oracle is None:
         ok = len(sdf) >= 0
-        return CompareResult(spec.name, ok, True, "rows-only (no oracle)", len(sdf), -1)
+        return CompareResult(
+            spec.name, ok, True, "rows-only (no oracle)", len(sdf), -1, spark_hash=spark_hash
+        )
     odf = con.execute(spec.oracle).df()
-    res = CompareResult(spec.name, True, True, spark_rows=len(sdf), oracle_rows=len(odf))
+    res = CompareResult(
+        spec.name, True, True, spark_rows=len(sdf), oracle_rows=len(odf), spark_hash=spark_hash
+    )
     if sorted(sdf.columns) != sorted(odf.columns):
         res.ok = False
         res.mismatches.append(f"columns: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")

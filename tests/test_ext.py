@@ -192,15 +192,70 @@ def test_quality_features_ranges(spark, docs):
         assert r.est_bpe_tokens >= r.n_words_q  # BPE estimate >= word count
 
 
-def test_language_scores_argmax(spark):
+def test_quality_features_empty_stopwords_counts_none(spark):
+    df = spark.createDataFrame([(1, "the cat")], "doc_id long, text string")
+    assert X.quality_features(df).first().stopword_ratio == 0.5
+    assert X.quality_features(df, stopwords=[]).first().stopword_ratio == 0.0
+
+
+def test_language_scores_lexicon_arguments(spark):
     df = spark.createDataFrame(
-        [(1, "the cat is in the house and it is big"),
-         (2, "el gato que vive en la casa"),
-         (3, "zzz qqq xxx")],
-        "doc_id long, text string",
+        [(1, "the cat"), (2, "zzz"), (3, None)], "doc_id long, text string"
     )
+    out = X.language_scores(df, lexicons={"en": ["the", "a"]}).orderBy("doc_id").collect()
+    assert [(r.score_en, r.lang_predicted) for r in out] == [
+        (1, "en"), (0, "unknown"), (None, "unknown"),
+    ]
+    with pytest.raises(ValueError, match="lexicons"):
+        X.language_scores(df, lexicons={})
+    with pytest.raises(ValueError, match="lexicons"):
+        X.predict_language(F.split("text", " "), {})
+
+
+def test_language_scores_argmax(spark):
+    import duckdb
+
+    from glue_etl_framework_spark.queries.llmops import _predict_case_sql
+    from glue_etl_framework_spark.queries.text import LEXICONS, lexicon_hits_sql
+
+    rows = [
+        (1, "the cat is in the house and it is big"),
+        (2, "el gato que vive en la casa"),
+        (3, "zzz qqq xxx"),
+        (4, None),
+        (5, ""),
+        (6, "la de que"),  # es/fr tie: the earlier lexicon wins
+        (7, "the el"),  # en/es tie
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r.lang_predicted for r in X.language_scores(df).collect()}
-    assert out[1] == "en" and out[2] == "es" and out[3] == "unknown"
+    assert out == {1: "en", 2: "es", 3: "unknown", 4: "unknown", 5: "unknown",
+                   6: "es", 7: "en"}
+
+    # The registry's argmax (pinned lexicons over single-space tokens)
+    # equals the oracle's CASE chain row for row, nulls and ties included.
+    words = F.split("text", " ")
+    got = sorted(
+        tuple(r)
+        for r in df.select(
+            "doc_id",
+            X.predict_language(words, LEXICONS),
+            X.lexicon_hits(words, LEXICONS["en"]),
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(
+        con.execute(
+            f"SELECT doc_id, {_predict_case_sql()}, {lexicon_hits_sql(LEXICONS['en'])} "
+            "FROM documents"
+        ).fetchall()
+    )
+    assert got == want
+    by_id = {r[0]: r[1:] for r in got}
+    assert by_id[4] == ("unknown", None) and by_id[5] == ("unknown", 0)
+    assert by_id[6][0] == "es" and by_id[7][0] == "en"
 
 
 def test_rolling_fingerprints_copy_detection(spark, docs):

@@ -10,6 +10,11 @@ next driver window. Results go to stdout AND probes/window_sweep_<tag>.txt
 so the evidence survives the round (the r6 session lost its /tmp sweep
 logs). Exit status 1 on any failure.
 
+Each line carries the Spark result's row count and a sha256 (first 16 hex
+digits) of its sorted, normalized rows, with the wall time last, so two
+sweeps (say, of a change and of its parent) compare row-for-row with
+    diff <(sed 's/ [0-9.]*s$//' a.txt) <(sed 's/ [0-9.]*s$//' b.txt)
+
 Usage:
     python tools_window_sweep.py [start end] [--tag r6] [--shuffle 8,200]
     python tools_window_sweep.py name1,name2 [--tag r6] [--shuffle 8,200]
@@ -78,7 +83,10 @@ def main() -> None:
                     status = "OK" if res.ok else "FAIL"
                     if not res.ok:
                         n_fail += 1
-                    line = f"shuffle={shuffle:<4} {status:<4} {dt:6.2f}s {name}"
+                    line = (
+                        f"shuffle={shuffle:<4} {status:<4} rows={res.spark_rows:<7} "
+                        f"sha256={res.spark_hash} {name} {dt:.2f}s"
+                    )
                     if not res.ok:
                         line += f"  :: {res.mismatches}"
                     print(line, flush=True)
